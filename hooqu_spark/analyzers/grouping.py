@@ -22,15 +22,16 @@ serves every grouping analyzer on the same (columns, where) pair.
 from __future__ import annotations
 
 import math
+from dataclasses import astuple
 from functools import reduce
 from typing import List, Optional, Sequence, Tuple
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..expr import translate
 from ..metrics import DoubleMetric
-from ..states import State
+from ..states import FrequencyStats, State
 from .base import (
     COUNT_COL,
     Analyzer,
@@ -110,7 +111,11 @@ class FrequencyBasedAnalyzer(Analyzer):
         data: DataFrame,
         grouping_columns: Sequence[str],
         where: Optional[str] = None,
+        keys: Sequence[str] = (),
     ) -> FrequenciesAndNumRows:
+        """Frequency table of ``grouping_columns``; ``keys`` are extra
+        leading group columns (e.g. a partition id) that take no part
+        in the all-NULL filter."""
         cols = list(grouping_columns)
         if where is not None:
             data = data.where(F.expr(translate(where)))
@@ -118,9 +123,9 @@ class FrequencyBasedAnalyzer(Analyzer):
             lambda a, b: a | b, (F.col(c).isNotNull() for c in cols)
         )
         frequencies = (
-            data.select(*cols)
+            data.select(*keys, *cols)
             .where(any_not_null)
-            .groupBy(*cols)
+            .groupBy(*keys, *cols)
             .agg(F.count(F.lit(1)).alias(COUNT_COL))
         )
         return FrequenciesAndNumRows(frequencies)
@@ -132,14 +137,11 @@ class FrequencyBasedAnalyzer(Analyzer):
 
     # -- shared sufficient statistics over the frequency table --------------
     @staticmethod
-    def frequency_stats(
-        frequencies: DataFrame,
-    ) -> Tuple[int, int, int, float, int]:
-        """(total_rows, n_groups, n_singletons, sum(c*ln c), max_count)
-        in one job — one row of sufficient statistics serving every
-        frequency-based analyzer on the same (columns, where) pair."""
+    def frequency_stats_exprs() -> List[Column]:
+        """The aggregates over a frequency table that yield
+        :class:`FrequencyStats` (see :func:`stats_from_row`)."""
         cnt = F.col(COUNT_COL)
-        row = frequencies.agg(
+        return [
             F.coalesce(F.sum(cnt), F.lit(0)).alias("total"),
             F.count(F.lit(1)).alias("groups"),
             F.coalesce(
@@ -149,8 +151,17 @@ class FrequencyBasedAnalyzer(Analyzer):
                 F.sum(cnt.cast("double") * F.log(cnt.cast("double"))), F.lit(0.0)
             ).alias("clnc"),
             F.coalesce(F.max(cnt), F.lit(0)).alias("maxc"),
-        ).first()
-        return int(row[0]), int(row[1]), int(row[2]), float(row[3]), int(row[4])
+        ]
+
+    @staticmethod
+    def frequency_stats(
+        frequencies: DataFrame,
+    ) -> Tuple[int, int, int, float, int]:
+        """(total_rows, n_groups, n_singletons, sum(c*ln c), max_count)
+        in one job — one row of sufficient statistics serving every
+        frequency-based analyzer on the same (columns, where) pair."""
+        row = frequencies.agg(*FrequencyBasedAnalyzer.frequency_stats_exprs()).first()
+        return astuple(stats_from_row(row))
 
     def metric_from_stats(
         self, total: int, groups: int, singletons: int, clnc: float,
@@ -172,11 +183,22 @@ class FrequencyBasedAnalyzer(Analyzer):
         raise NotImplementedError
 
     def compute_metric_from(
-        self, state: Optional[FrequenciesAndNumRows]
+        self, state: Optional[State]
     ) -> DoubleMetric:
+        """From a frequency table, or from merged :class:`FrequencyStats`
+        (per-partition lineage states)."""
         if state is None:
             return metric_from_empty(self, self.name, self.instance, self.entity)
+        if isinstance(state, FrequencyStats):
+            return self.metric_from_stats(*astuple(state))
         return self.metric_from_stats(*self.frequency_stats(state.frequencies))
+
+
+def stats_from_row(values: Sequence) -> FrequencyStats:
+    """:class:`FrequencyStats` from the values of
+    ``FrequencyBasedAnalyzer.frequency_stats_exprs()``."""
+    total, groups, singletons, clnc, maxc = values
+    return FrequencyStats(int(total), int(groups), int(singletons), float(clnc), int(maxc))
 
 
 class Uniqueness(FrequencyBasedAnalyzer):

@@ -8,10 +8,16 @@ signature but stubbed (``aggregate_with``/``save_states_with`` hooks,
 * ``compute_partition_states`` — ONE ``groupBy(partition_col).agg``
   job evaluating every scan-shareable analyzer's aggregate expressions
   per partition bucket; each bucket row becomes serialized monoid
-  states.
+  states.  Frequency-based analyzers (Uniqueness, Distinctness,
+  CountDistinct, Entropy, ...) add one job per (columns, where) pair
+  whose per-bucket state is the bucket's frequency statistics.
 * ``merge_states`` — driver-side monoid fold across buckets; by
   construction ``metric(merge(states)) == metric(whole table)`` for
-  sum/count/min/max/mean/stddev(Chan) states.
+  sum/count/min/max/mean/stddev(Chan) states.  For frequency states it
+  holds only under a precondition the caller must guarantee: the
+  partition key is a function of the grouping columns (e.g.
+  ``pmod(xxhash64(url), n)`` for ``is_unique("url")``), so no group
+  spans two buckets.
 * ``StateRepository`` — parquet-backed commit log of (run_id, bucket,
   analyzer_key, state_json).  A killed run resumes by processing only
   buckets absent from the committed log.
@@ -32,8 +38,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from .analyzers.base import Analyzer, ScanShareableAnalyzer, apply_projections
+from .analyzers.grouping import FrequencyBasedAnalyzer, stats_from_row
 from .metrics import DoubleMetric
-from .states import State, state_from_dict
+from .states import FrequencyStats, State, state_from_dict
 
 
 def analyzer_key(a: Analyzer) -> str:
@@ -53,10 +60,20 @@ class StateRecord:
 
 def compute_partition_states(
     df: DataFrame,
-    analyzers: Sequence[ScanShareableAnalyzer],
+    analyzers: Sequence[Analyzer],
     partition_col: str,
 ) -> List[StateRecord]:
-    """One groupBy job -> per-bucket states for all analyzers.
+    """One groupBy job -> per-bucket states for all scan-shareable
+    analyzers, plus one job per (columns, where) pair of
+    frequency-based analyzers.
+
+    A frequency-based analyzer's per-bucket state is the
+    :class:`~hooqu_spark.states.FrequencyStats` row of the bucket's
+    frequency table.  Those merge exactly only if no group spans two
+    buckets, so the CALLER must guarantee that ``partition_col`` is a
+    function of the analyzer's grouping columns (e.g. a hash of them).
+    Analyzers that need the full frequency table (MutualInformation)
+    are rejected.
 
     Bucket ids are stored as SPARK-cast strings (grouping on
     ``cast(partition_col as string)``), so the commit-log markers use
@@ -65,31 +82,68 @@ def compute_partition_states(
     buckets ('True' vs 'true') and silently break retry skipping."""
     from pyspark.sql import functions as F
 
-    df = apply_projections(df, analyzers)
-    slices: List[Tuple[ScanShareableAnalyzer, int, int]] = []
-    exprs = []
+    scan: List[ScanShareableAnalyzer] = []
+    by_pair: Dict[Tuple[Tuple[str, ...], Optional[str]], List[FrequencyBasedAnalyzer]] = {}
     for a in analyzers:
-        ae = a.cached_aggregation_exprs(df)
-        slices.append((a, len(exprs), len(exprs) + len(ae)))
-        exprs.extend(ae)
-    rows = (
-        df.groupBy(F.col(partition_col).cast("string").alias(partition_col))
-        .agg(*(e.alias(f"_s{i}") for i, e in enumerate(exprs)))
-        .collect()
-    )
-    records: List[StateRecord] = []
-    for row in rows:
-        values = list(row)
-        bucket = str(values[0])
-        body = values[1:]
-        for a, start, end in slices:
-            try:
-                state = a.state_from_agg(body[start:end])
-                payload = json.dumps(state.to_dict()) if state else "null"
-            except Exception:  # e.g. stddev with n=0 in an empty bucket
-                payload = "null"
-            records.append(StateRecord(bucket, analyzer_key(a), payload))
-    return records
+        if not isinstance(a, FrequencyBasedAnalyzer):
+            scan.append(a)
+        elif a.uses_full_frequencies:
+            raise ValueError(f"{a!r} has no per-partition state")
+        else:
+            by_pair.setdefault((tuple(a.grouping_columns), a.where), []).append(a)
+
+    bucket_id = F.col(partition_col).cast("string")
+    # bucket -> analyzer key -> serialized state
+    payloads: Dict[str, Dict[str, str]] = {}
+
+    if scan:
+        proj = apply_projections(df, scan)
+        slices: List[Tuple[ScanShareableAnalyzer, int, int]] = []
+        exprs = []
+        for a in scan:
+            ae = a.cached_aggregation_exprs(proj)
+            slices.append((a, len(exprs), len(exprs) + len(ae)))
+            exprs.extend(ae)
+        rows = (
+            proj.groupBy(bucket_id.alias(partition_col))
+            .agg(*(e.alias(f"_s{i}") for i, e in enumerate(exprs)))
+            .collect()
+        )
+        for row in rows:
+            values = list(row)
+            body = values[1:]
+            out = payloads.setdefault(str(values[0]), {})
+            for a, start, end in slices:
+                try:
+                    state = a.state_from_agg(body[start:end])
+                    out[analyzer_key(a)] = json.dumps(state.to_dict()) if state else "null"
+                except Exception:  # e.g. stddev with n=0 in an empty bucket
+                    out[analyzer_key(a)] = "null"
+
+    empty = json.dumps(FrequencyStats(0, 0, 0, 0.0, 0).to_dict())
+    for (cols, where), group in by_pair.items():
+        freq = FrequencyBasedAnalyzer.compute_frequencies(
+            df.withColumn(partition_col, bucket_id), cols, where, keys=[partition_col]
+        ).frequencies
+        rows = (
+            freq.groupBy(partition_col)
+            .agg(*FrequencyBasedAnalyzer.frequency_stats_exprs())
+            .collect()
+        )
+        stats = {str(r[0]): json.dumps(stats_from_row(r[1:]).to_dict()) for r in rows}
+        for bucket in stats:
+            payloads.setdefault(bucket, {})
+        # a bucket whose rows are all NULL (or filtered) on the group
+        # columns has no frequency rows: its state is the empty one
+        for bucket, out in payloads.items():
+            for a in group:
+                out[analyzer_key(a)] = stats.get(bucket, empty)
+
+    return [
+        StateRecord(bucket, k, payload)
+        for bucket, out in payloads.items()
+        for k, payload in out.items()
+    ]
 
 
 def merge_states(records: Sequence[StateRecord]) -> Dict[str, Optional[State]]:
@@ -110,7 +164,7 @@ def merge_states(records: Sequence[StateRecord]) -> Dict[str, Optional[State]]:
 
 
 def metrics_from_states(
-    analyzers: Sequence[ScanShareableAnalyzer],
+    analyzers: Sequence[Analyzer],
     merged: Dict[str, Optional[State]],
 ) -> Dict[Analyzer, DoubleMetric]:
     out: Dict[Analyzer, DoubleMetric] = {}

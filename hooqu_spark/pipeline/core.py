@@ -19,8 +19,11 @@ Execution design (Spark-first, 100TB-minded):
   the "done" marker.  A killed run resumes by processing only
   uncommitted buckets.
 * **metrics** — per-bucket monoid states (lineage) merge to global
-  metrics; a gating ``VerificationSuite`` evaluates Checks on the
-  checkpoint.
+  metrics.  The gating Checks are evaluated from the same merged
+  states (``VerificationSuite.evaluate``), not by rescanning the
+  checkpoint: the gate's analyzers join the lineage set, and
+  ``is_unique(url)`` keeps per-bucket frequency statistics, exact
+  because the bucket is a hash of the url.
 """
 
 from __future__ import annotations
@@ -46,8 +49,15 @@ from ..analyzers import (
     StandardDeviation,
     Sum,
 )
+from ..analyzers.runner import AnalyzerContext
 from ..checks import Check, CheckLevel
-from ..lineage import StateRepository, compute_partition_states, metrics_from_states, merge_states
+from ..lineage import (
+    StateRepository,
+    analyzer_key,
+    compute_partition_states,
+    merge_states,
+    metrics_from_states,
+)
 from ..metrics import DoubleMetric
 from ..verification_suite import VerificationResult, VerificationSuite
 from .features import compute_doc_features
@@ -147,7 +157,10 @@ def lineage_analyzers(rules: RuleSet = DEFAULT_RULES) -> List[ScanShareableAnaly
 
 def gating_checks(rules: RuleSet = DEFAULT_RULES,
                   min_keep_rate: float = 0.05) -> List[Check]:
-    """Quality gates evaluated on the enriched checkpoint."""
+    """Quality gates on the enriched checkpoint.  ``run_pipeline``
+    evaluates them from per-bucket states, so every analyzer they
+    require must be scan-shareable or frequency-based with the url as
+    grouping column (the bucket is a hash of the url)."""
     return [
         (
             Check(CheckLevel.ERROR, "input integrity")
@@ -203,9 +216,13 @@ def run_pipeline(
     """
     repo = StateRepository(f"{work_dir}/states")
     enriched_dir = f"{work_dir}/enriched/{run_id}"
-    analyzers = lineage_analyzers(rules)
+    checks = gating_checks(rules)
+    gate = list(dict.fromkeys(a for c in checks for a in c.required_analyzers()))
+    # one per-bucket states job serves the lineage metrics and the gate
+    analyzers = list(dict.fromkeys([*lineage_analyzers(rules), *gate]))
 
-    committed = repo.committed_buckets(run_id) if resume else []
+    prior = repo.load(run_id) if resume else []
+    committed = sorted({r.bucket for r in prior})
 
     bucketed = pages.withColumn(
         "bucket", F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("string")
@@ -214,44 +231,58 @@ def run_pipeline(
     if committed:
         todo = bucketed.where(~F.col("bucket").isin(committed))
 
-    processed: List[str] = []
-    if todo.limit(1).count() > 0:
-        # Drop the fat binary column BEFORE the Arrow UDF stage:
-        # Catalyst does not prune columns through the Python eval node,
-        # so anything still in the plan is decoded and carried (2.4x
-        # slower measured with html kept).
-        enriched_new = apply_rules(enrich(todo.drop("html")), rules)
-        (
-            enriched_new.write.partitionBy("bucket")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(enriched_dir)
-        )
-        checkpoint = spark.read.parquet(enriched_dir)
-        new_buckets = [
-            r[0]
-            for r in checkpoint.select("bucket").distinct().collect()
-            if str(r[0]) not in committed
-        ]
-        fresh = checkpoint.where(F.col("bucket").isin([str(b) for b in new_buckets]))
-        records = compute_partition_states(fresh, analyzers, "bucket")
-        repo.save(run_id, records)
-        processed = sorted(str(b) for b in new_buckets)
-
-    checkpoint = spark.read.parquet(enriched_dir)
-    merged = merge_states(repo.load(run_id))
-    metrics = metrics_from_states(analyzers, merged)
-    verification = (
-        VerificationSuite().on_data(checkpoint).add_checks(gating_checks(rules)).run()
+    # Drop the fat binary column BEFORE the Arrow UDF stage: Catalyst
+    # does not prune columns through the Python eval node, so anything
+    # still in the plan is decoded and carried (2.4x slower measured
+    # with html kept).  An empty ``todo`` writes no partition.
+    enriched_new = apply_rules(enrich(todo.drop("html")), rules)
+    (
+        enriched_new.write.partitionBy("bucket")
+        .option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite")
+        .parquet(enriched_dir)
     )
-    kept = checkpoint.where(F.col("keep"))
+    # The write plan's schema, as partition discovery would infer it
+    # (bucket last, as an int), so the read starts no inference job.
+    schema = T.StructType(
+        [T.StructField(f.name, f.dataType) for f in enriched_new.schema.fields
+         if f.name != "bucket"]
+        + [T.StructField("bucket", T.IntegerType())]
+    )
+    checkpoint = spark.read.schema(schema).parquet(enriched_dir)
+
+    # Buckets in the checkpoint but not in the log: this run's, plus
+    # any a crashed run wrote but never committed.
+    fresh = checkpoint
+    if committed:
+        fresh = checkpoint.where(~F.col("bucket").cast("string").isin(committed))
+    records = compute_partition_states(fresh, analyzers, "bucket")
+    repo.save(run_id, records)
+    processed = sorted({r.bucket for r in records})
+
+    merged = merge_states([*prior, *records])
+    metrics = metrics_from_states(analyzers, merged)
+    # A log written with another analyzer set lacks some states; such
+    # a metric would silently cover only part of the checkpoint.
+    covered: Dict[str, set] = {}
+    for r in [*prior, *records]:
+        covered.setdefault(r.analyzer_key, set()).add(r.bucket)
+    for a in analyzers:
+        missing = set(committed).union(processed) - covered.get(analyzer_key(a), set())
+        if missing:
+            metrics[a] = a.to_failure_metric(
+                ValueError(f"no committed state for buckets {sorted(missing)}")
+            )
+    verification = VerificationSuite().evaluate(
+        checks, AnalyzerContext({a: metrics[a] for a in gate})
+    )
     return PipelineResult(
-        kept=kept,
+        kept=checkpoint.where(F.col("keep")),
         enriched=checkpoint,
         verification=verification,
         metrics=metrics,
         processed_buckets=processed,
-        resumed_buckets=sorted(committed),
+        resumed_buckets=committed,
     )
 
 

@@ -54,9 +54,12 @@ class MetricsRepository:
         for f in sorted(os.listdir(self.root)):
             if not f.startswith("metrics_") or not f.endswith(".parquet"):
                 continue
+            # the file-name prefix only narrows the reads: tag "a" also
+            # prefixes tag "a_b"'s files, so the stored tag decides
             if tag is not None and not f.startswith(f"metrics_{tag}_"):
                 continue
-            frames.append(pd.read_parquet(os.path.join(self.root, f)))
+            pdf = pd.read_parquet(os.path.join(self.root, f))
+            frames.append(pdf if tag is None else pdf[pdf["tag"] == tag])
         if not frames:
             return pd.DataFrame(
                 columns=["tag", "seq", "entity", "instance", "name", "value"]

@@ -252,6 +252,35 @@ def _merge_quantile_grids(g1, n1, g2, n2, m):
 
 
 @dataclass(frozen=True)
+class FrequencyStats(State):
+    """Sufficient statistics of a group-frequency table: rows, groups,
+    singleton groups, ``Σ c·ln c`` and the largest group count — what
+    every scalar frequency-based metric (Uniqueness, Distinctness,
+    UniqueValueRatio, CountDistinct, Entropy, Histogram) reduces to.
+
+    Merging sums the first four fields and takes the max of the fifth,
+    which is exact only when no group spans two merged parts (e.g.
+    per-bucket states where the bucket is a function of the grouping
+    columns); the analyzer turns the merged statistics into its metric.
+    """
+
+    total: int
+    groups: int
+    singletons: int
+    clnc: float
+    maxc: int
+
+    def sum(self, other: "FrequencyStats") -> "FrequencyStats":
+        return FrequencyStats(
+            self.total + other.total,
+            self.groups + other.groups,
+            self.singletons + other.singletons,
+            self.clnc + other.clnc,
+            max(self.maxc, other.maxc),
+        )
+
+
+@dataclass(frozen=True)
 class CorrelationState(DoubleValuedState):
     """Pearson-correlation sufficient statistics over rows where BOTH
     columns are non-null: ``(n, Σx, Σy, Σx², Σy², Σxy)``.  Merging is
@@ -393,6 +422,7 @@ _STATE_TYPES = {
         QuantileState,
         QuantileSketchState,
         ApproxCountDistinctState,
+        FrequencyStats,
         CorrelationState,
         DataTypeHistogramState,
     )

@@ -56,6 +56,7 @@ def main(argv=None) -> int:
     )
     spark.sparkContext.setLogLevel("WARN")
 
+    from hooqu_spark.analyzers import Compliance, Size
     from hooqu_spark.pipeline import run_pipeline, synthesize
 
     if args.synthesize:
@@ -81,8 +82,12 @@ def main(argv=None) -> int:
     if args.output:
         result.kept.write.mode("overwrite").parquet(args.output)
 
-    n_total = result.enriched.count()
-    n_kept = result.kept.count()
+    # counts from the merged lineage states: no scan of the checkpoint
+    size = result.metrics[Size()].value
+    keep_rate = result.metrics[Compliance("keep_rate", "keep == true")].value
+    n_total = int(size.get()) if size.isSuccess else 0
+    # keep_rate is kept/total as a double, so this rounds back exactly
+    n_kept = round(keep_rate.get() * n_total) if n_total else 0
     summary = {
         "run_id": args.run_id,
         "status": result.verification.status.name,

@@ -82,6 +82,22 @@ class TestRunWithAnomalyChecks:
         # three runs were persisted
         assert len(repo.diff("t", "Size", "*")) == 3
 
+    def test_tag_is_not_a_file_name_prefix(self, tmp_path):
+        from hooqu_spark.metrics import DoubleMetric, Entity, Success
+
+        def size(n):
+            return {Size(): DoubleMetric(Entity.DATASET, "Size", "*", Success(n))}
+
+        repo = MetricsRepository(str(tmp_path))
+        repo.save("a", size(10.0))
+        repo.save("a_b", size(99.0))
+        repo.save("a_b", size(98.0))
+        assert repo.latest("a")["value"].tolist() == [10.0]
+        assert repo.load("a")["tag"].unique().tolist() == ["a"]
+        assert repo.diff("a", "Size", "*")["value"].tolist() == [10.0]
+        assert repo.diff("a_b", "Size", "*")["value"].tolist() == [99.0, 98.0]
+        assert len(repo.load()) == 3
+
     def test_combines_with_regular_checks(self, spark, tmp_path):
         repo = MetricsRepository(str(tmp_path))
         df = spark.createDataFrame([(1.0,), (2.0,), (3.0,)], "v double")

@@ -2,14 +2,18 @@
 independent reference implementation (F1 + byte-identical scrub),
 gating suite, and checkpoint/resume."""
 
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
+from hooqu_spark import VerificationSuite
 from hooqu_spark.checks import CheckStatus
 from hooqu_spark.pipeline import (
     DEFAULT_RULES,
     apply_rules,
     enrich,
+    gating_checks,
     lineage_analyzers,
     make_doc,
     make_docs_pdf,
@@ -141,6 +145,44 @@ class TestKernelFloatExact:
         assert n_checked == N_DOCS
 
 
+def assert_gate_equals_scan(result):
+    """The gate evaluated from merged per-bucket states must equal a
+    gating suite scanning the checkpoint: every metric (rel 1e-9) and
+    every check and constraint status."""
+    scan = (
+        VerificationSuite().on_data(result.enriched).add_checks(gating_checks()).run()
+    )
+    gate = result.verification
+    assert set(gate.metrics) == set(scan.metrics)
+    for a, want in scan.metrics.items():
+        assert want.value.isSuccess, repr(a)
+        assert gate.metrics[a].value.get() == pytest.approx(
+            want.value.get(), rel=1e-9
+        ), repr(a)
+    assert gate.status == scan.status
+    pairs = list(zip(gate.check_results.values(), scan.check_results.values()))
+    assert len(pairs) == len(scan.check_results)
+    for got, want in pairs:
+        assert got.check.description == want.check.description
+        assert got.status == want.status
+        assert [c.status for c in got.constraint_results] == [
+            c.status for c in want.constraint_results
+        ]
+
+
+def count_jobs(spark, fn):
+    """(fn(), number of Spark jobs it started)."""
+    sc = spark.sparkContext
+    group = "test-job-budget"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 class TestPipelineEndToEnd:
     def test_run_pipeline_and_resume(self, spark, pages, tmp_path):
         work = str(tmp_path / "work")
@@ -151,6 +193,7 @@ class TestPipelineEndToEnd:
             CheckStatus.SUCCESS,
             CheckStatus.WARNING,
         )
+        assert_gate_equals_scan(result)
         assert len(result.processed_buckets) == 8
         n_kept = result.kept.count()
         assert 0 < n_kept < N_DOCS
@@ -172,6 +215,7 @@ class TestPipelineEndToEnd:
         assert result2.processed_buckets == []
         assert len(result2.resumed_buckets) == 8
         assert result2.kept.count() == n_kept
+        assert_gate_equals_scan(result2)
 
     def test_partial_run_resumes_missing_buckets(self, spark, pages, tmp_path):
         work = str(tmp_path / "work2")
@@ -189,6 +233,58 @@ class TestPipelineEndToEnd:
         assert set(r2.processed_buckets).isdisjoint(done_first)
         # full data now present
         assert r2.enriched.count() == N_DOCS
+        assert_gate_equals_scan(r2)
+
+    def test_duplicate_url_fails_uniqueness_like_a_scan(self, spark, pages, tmp_path):
+        from hooqu_spark.analyzers import Uniqueness
+
+        dup = pages.union(pages.where(F.col("url").endswith("/page/7")))
+        result = run_pipeline(spark, dup, str(tmp_path / "work"), n_buckets=8)
+        assert result.verification.status == CheckStatus.ERROR
+        # two copies of one url among N_DOCS + 1 rows
+        uniqueness = result.verification.metrics[Uniqueness(["url"])].value.get()
+        assert uniqueness == pytest.approx((N_DOCS - 1) / (N_DOCS + 1), rel=1e-12)
+        assert_gate_equals_scan(result)
+
+    def test_log_without_gate_states_fails_the_gate(self, spark, pages, tmp_path):
+        from hooqu_spark.analyzers import Uniqueness
+        from hooqu_spark.lineage import StateRepository, analyzer_key
+
+        work = str(tmp_path / "work")
+        half = pages.where(F.pmod(F.xxhash64("url"), F.lit(8)) < 4)
+        run_pipeline(spark, half, work, run_id="r", n_buckets=8)
+        # a log committed by a version without the url frequency state
+        repo = StateRepository(f"{work}/states")
+        key = analyzer_key(Uniqueness(["url"]))
+        kept = [r for r in repo.load("r") if r.analyzer_key != key]
+        shutil.rmtree(f"{work}/states")
+        repo.save("r", kept)
+
+        result = run_pipeline(spark, pages, work, run_id="r", n_buckets=8)
+        metric = result.verification.metrics[Uniqueness(["url"])]
+        assert metric.value.isFailure
+        assert "no committed state for buckets" in str(metric.value.exception)
+        assert result.verification.status == CheckStatus.ERROR
+
+    def test_empty_input_fails_the_gate(self, spark, pages, tmp_path):
+        result = run_pipeline(spark, pages.limit(0), str(tmp_path / "work"), n_buckets=8)
+        assert result.verification.status == CheckStatus.ERROR
+        integrity = next(
+            r for c, r in result.verification.check_results.items()
+            if c.description == "input integrity"
+        )
+        assert integrity.constraint_results[0].status.name == "FAILURE"  # has_size
+        assert result.processed_buckets == []
+        assert result.kept.count() == 0
+
+    def test_fresh_run_job_budget(self, spark, pages, tmp_path):
+        pages.count()  # the cached fixture is not part of the run
+        result, jobs = count_jobs(
+            spark, lambda: run_pipeline(spark, pages, str(tmp_path / "work"), n_buckets=8)
+        )
+        assert len(result.processed_buckets) == 8
+        # checkpoint write, states job, per-bucket url frequencies
+        assert jobs <= 8
 
 
 class TestLineageStates:

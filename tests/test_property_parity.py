@@ -140,3 +140,58 @@ def test_state_merge_equals_whole(spark, seed):
             assert math.isnan(merged_v)
         else:
             assert merged_v == pytest.approx(whole_v, rel=1e-9, abs=1e-12)
+
+
+@pytest.mark.parametrize("seed", SEEDS[:3])
+def test_frequency_states_merge_equals_whole(spark, seed):
+    """Per-bucket frequency statistics merge to the whole-table metric
+    when the bucket is a function of the grouping column."""
+    from pyspark.sql import functions as F
+
+    from hooqu_spark.analyzers import (
+        CountDistinct,
+        Distinctness,
+        Entropy,
+        Histogram,
+        MutualInformation,
+        UniqueValueRatio,
+    )
+    from hooqu_spark.lineage import (
+        compute_partition_states,
+        merge_states,
+        metrics_from_states,
+    )
+
+    df = spark.createDataFrame(random_frame(seed, 90).astype({"att1": "float64"}))
+    # all-NULL att2 rows form their own bucket, which has no frequencies
+    df = df.withColumn(
+        "bucket",
+        F.when(F.col("att2").isNull(), F.lit(99)).otherwise(
+            F.pmod(F.xxhash64("att2"), F.lit(4))
+        ),
+    )
+    analyzers = [
+        Size(),
+        Uniqueness(["att2"]),
+        Uniqueness(["att2"], where="att1 > 0"),
+        Distinctness(["att2"]),
+        CountDistinct(["att2"]),
+        Entropy(["att2"]),
+        UniqueValueRatio(["att2"]),
+        Histogram("att2"),
+    ]
+    records = compute_partition_states(df, analyzers, "bucket")
+    assert {r.bucket for r in records} == {
+        str(r[0]) for r in df.select("bucket").distinct().collect()
+    }
+    merged = metrics_from_states(analyzers, merge_states(records))
+    whole = do_analysis_run(df, analyzers)
+    for a in analyzers:
+        want = whole.metric(a).value
+        if want.isFailure:
+            assert merged[a].value.isFailure, repr(a)
+        else:
+            assert merged[a].value.get() == pytest.approx(want.get(), rel=1e-9), repr(a)
+
+    with pytest.raises(ValueError):
+        compute_partition_states(df, [MutualInformation(["att1", "att2"])], "bucket")
