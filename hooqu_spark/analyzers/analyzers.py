@@ -249,11 +249,6 @@ class Quantile(ScanShareableAnalyzer):
         k = round(self.quantile * (n - 1))  # banker's rounding = pandas 'nearest'
         return _exact_rank_fraction(k, n - 1)
 
-    def phase2_exprs(self, df: DataFrame, n: int) -> List[Column]:
-        return [
-            F.percentile(self._gated_col(df), F.lit(self._adjusted_fraction(n)))
-        ]
-
     @staticmethod
     def fused_phase2_expr(
         df: DataFrame, group: "List[Tuple[Quantile, int]]"
@@ -282,15 +277,10 @@ class Quantile(ScanShareableAnalyzer):
         raise NotImplementedError("Quantile uses the two-phase protocol")
 
     def compute_state_from(self, data: DataFrame) -> Optional[State]:
-        self._validate()
-        n = int(
-            data.agg(self.phase1_exprs(data)[0].alias("_n")).first()[0] or 0
-        )
-        if n == 0:
-            return QuantileState(float("nan"))
-        value = data.agg(
-            self.phase2_exprs(data, n)[0].alias("_q")
-        ).first()[0]
+        n = int(data.agg(*self.phase1_exprs(data)).first()[0] or 0)
+        value = None
+        if n:
+            value = data.agg(self.fused_phase2_expr(data, [(self, n)])).first()[0][0]
         return self.state_from_phases(n, value)
 
     def __repr__(self):

@@ -386,12 +386,12 @@ class ScanShareableAnalyzer(Analyzer):
         return cols
 
     def compute_state_from(self, data: DataFrame) -> Optional[State]:
-        data = apply_projections(data, [self])
-        exprs = self.aggregation_exprs(data)
-        row = data.agg(
-            *(e.alias(f"_h{i}") for i, e in enumerate(exprs))
-        ).first()
-        return self.state_from_agg(list(row))
+        from .fused import fused_states
+
+        state = fused_states(data, [self])[None][self]
+        if isinstance(state, Exception):
+            raise state
+        return state
 
     def compute_metric_from(self, state: Optional[State]) -> DoubleMetric:
         if state is not None:

@@ -6,16 +6,18 @@ each (``hooqu/analyzers/runners/analysis_runner.py:150-170``), this
 runner re-enables the scan-sharing design the reference left dormant
 (``analysis_runner.py:173-230``) — on Spark it is the whole point:
 
-* job 1 — ONE ``df.agg(e1..eN)`` computing every scan-shareable
-  analyzer (Size/Completeness/Min/Max/Sum/Mean/StdDev/Compliance/
-  PatternMatch/ApproxQuantile/...) plus the phase-1 counts of exact
-  Quantile analyzers.  Catalyst executes it as partial+final hash
-  aggregation with whole-stage codegen; differently-``where``'d
-  analyzers coexist via conditional aggregates.
-* job 2 — (only if exact Quantiles present) one ``df.agg`` of
-  ``percentile`` expressions at nearest-rank-adjusted fractions.
-* one groupBy job per distinct (grouping_columns, where) pair, shared
-  by all frequency-based analyzers on that pair.
+* the fused-state kernel (:func:`~hooqu_spark.analyzers.fused.fused_states`)
+  runs ONE ``df.agg(e1..eN)`` for every scan-shareable analyzer
+  (Size/Completeness/Min/Max/Sum/Mean/StdDev/Compliance/PatternMatch/
+  ApproxQuantile/...) plus the phase-1 counts of exact Quantiles, and
+  one groupBy job per distinct (grouping_columns, where) pair, shared
+  by all scalar frequency-based analyzers on that pair.  Catalyst
+  executes the fused scan as partial+final hash aggregation with
+  whole-stage codegen; differently-``where``'d analyzers coexist via
+  conditional aggregates.
+* (only if exact Quantiles present) one ``df.agg`` of ``percentile``
+  expressions at nearest-rank-adjusted fractions.
+* MutualInformation and analyzers that cannot fuse run standalone.
 
 Precondition failures and unresolvable expressions become per-analyzer
 ``Failure`` metrics without poisoning the fused job.
@@ -24,19 +26,15 @@ Precondition failures and unresolvable expressions become per-analyzer
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Dict, List, Mapping, Optional, Sequence, Tuple
+from typing import Dict, List, Optional, Sequence, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..metrics import DoubleMetric, Entity, Metric
+from ..metrics import Metric
 from .analyzers import Quantile
-from .base import (
-    Analyzer,
-    ScanShareableAnalyzer,
-    apply_projections,
-    find_first_failing,
-)
+from .base import Analyzer, ScanShareableAnalyzer, find_first_failing
+from .fused import fused_states, metric_from_state
 from .grouping import FrequencyBasedAnalyzer
 
 
@@ -80,6 +78,24 @@ class AnalyzerContext:
         )
 
 
+class _QuantileCount(ScanShareableAnalyzer):
+    """Phase 1 of an exact :class:`Quantile`: its row count, riding in
+    the fused scan.  The state is the plain count."""
+
+    def __init__(self, quantile: Quantile):
+        super().__init__("QuantileCount", quantile.instance, quantile.entity, quantile.where)
+        self.quantile = quantile
+
+    def _identity(self):
+        return super()._identity() + (self.quantile.quantile,)
+
+    def aggregation_exprs(self, df: DataFrame):
+        return self.quantile.phase1_exprs(df)
+
+    def state_from_agg(self, values: Sequence) -> int:
+        return int(values[0] or 0)
+
+
 def do_analysis_run(
     data: DataFrame, analyzers: Sequence[Analyzer]
 ) -> AnalyzerContext:
@@ -106,122 +122,62 @@ def do_analysis_run(
         else:
             passed.append(a)
 
-    scan: List[ScanShareableAnalyzer] = []
-    quantiles: List[Quantile] = []
-    grouping: List[FrequencyBasedAnalyzer] = []
+    fused: List[Analyzer] = []
+    counts: Dict[Quantile, _QuantileCount] = {}
     others: List[Analyzer] = []
     for a in passed:
         if isinstance(a, Quantile):
-            quantiles.append(a)
-        elif isinstance(a, ScanShareableAnalyzer) and a.fuses_into_scan:
-            scan.append(a)
-        elif isinstance(a, FrequencyBasedAnalyzer):
-            grouping.append(a)
+            counts[a] = _QuantileCount(a)
+            fused.append(counts[a])
+        elif (
+            isinstance(a, ScanShareableAnalyzer) and a.fuses_into_scan
+        ) or (
+            isinstance(a, FrequencyBasedAnalyzer) and not a.uses_full_frequencies
+        ):
+            fused.append(a)
         else:
             others.append(a)
 
-    # 2. Fused single-scan aggregation (over shared derived columns —
-    #    expensive per-row classifications evaluated once, see
-    #    ScanShareableAnalyzer.projection_cols).
-    agg_input = apply_projections(data, scan)
-    fused: List[Tuple[Analyzer, int, int]] = []  # (analyzer, start, end)
-    exprs = []
-    for a in scan:
-        try:
-            ae = a.cached_aggregation_exprs(agg_input)
-        except Exception as e:  # unresolvable expression -> Failure
-            metrics[a] = a.to_failure_metric(e)
-            continue
-        fused.append((a, len(exprs), len(exprs) + len(ae)))
-        exprs.extend(ae)
-    q_offsets: List[Tuple[Quantile, int]] = []
-    for q in quantiles:
-        try:
-            qe = q.phase1_exprs(data)
-        except Exception as e:
-            metrics[q] = q.to_failure_metric(e)
-            continue
-        q_offsets.append((q, len(exprs)))
-        exprs.extend(qe)
+    # 2. The fused scan (with the exact quantiles' phase-1 counts) and
+    #    one frequency job per (columns, where) pair.
+    states = fused_states(data, fused)[None] if fused else {}
+    for a, state in states.items():
+        if not isinstance(a, _QuantileCount):
+            metrics[a] = metric_from_state(a, state)
 
-    if exprs:
-        # no aliases: the row is consumed positionally, and each
-        # .alias() is a py4j round trip (54 exprs ~= 0.1s of driver
-        # time per fused run)
-        row = list(agg_input.agg(*exprs).first())
-        for a, start, end in fused:
-            try:
-                state = a.state_from_agg(row[start:end])
-                metrics[a] = a.compute_metric_from(state)
-            except Exception as e:  # noqa: BLE001
-                metrics[a] = a.to_failure_metric(e)
-
-        # 3. Exact quantiles: phase 2 (one more fused job).  Quantiles
-        #    sharing a (column, where) pair fuse into ONE
-        #    percentile(col, array(q1..qk)) — a single sort buffer per
-        #    group instead of one full-column buffer per quantile.
-        by_col: Dict[
-            Tuple[str, Optional[str]], List[Tuple[Quantile, int]]
-        ] = {}
-        for q, off in q_offsets:
-            n = int(row[off] or 0)
-            if n == 0:
-                try:
-                    metrics[q] = q.compute_metric_from(q.state_from_phases(0, None))
-                except Exception as e:  # noqa: BLE001
-                    metrics[q] = q.to_failure_metric(e)
-                continue
+    # 3. Exact quantiles: phase 2 (one more fused job).  Quantiles
+    #    sharing a (column, where) pair fuse into ONE
+    #    percentile(col, array(q1..qk)) — a single sort buffer per
+    #    group instead of one full-column buffer per quantile.
+    by_col: Dict[Tuple[str, Optional[str]], List[Tuple[Quantile, int]]] = {}
+    for q, count in counts.items():
+        n = states[count]
+        if isinstance(n, Exception):
+            metrics[q] = metric_from_state(q, n)
+        elif n == 0:
+            metrics[q] = metric_from_state(q, q.state_from_phases(0, None))
+        else:
             by_col.setdefault((q.instance, q.where), []).append((q, n))
-        groups = list(by_col.values())
-        if groups:
-            q_row = list(
-                data.agg(
-                    *(
-                        Quantile.fused_phase2_expr(data, g).alias(f"_q{i}")
-                        for i, g in enumerate(groups)
-                    )
-                ).first()
+    groups = list(by_col.values())
+    if groups:
+        q_row = data.agg(
+            *(
+                Quantile.fused_phase2_expr(data, g).alias(f"_q{i}")
+                for i, g in enumerate(groups)
             )
-            for g, values in zip(groups, q_row):
-                for j, (q, n) in enumerate(g):
-                    try:
-                        value = None if values is None else values[j]
-                        state = q.state_from_phases(n, value)
-                        metrics[q] = q.compute_metric_from(state)
-                    except Exception as e:  # noqa: BLE001
-                        metrics[q] = q.to_failure_metric(e)
+        ).first()
+        for g, values in zip(groups, q_row):
+            for j, (q, n) in enumerate(g):
+                value = None if values is None else values[j]
+                metrics[q] = metric_from_state(q, q.state_from_phases(n, value))
 
-    # 4. Grouping analyzers: one groupBy job per (columns, where) pair,
-    #    shared across all frequency-based analyzers on that pair.
-    by_group: Dict[Tuple[Tuple[str, ...], Optional[str]], List[FrequencyBasedAnalyzer]] = {}
-    for g in grouping:
-        by_group.setdefault(
-            (tuple(g.grouping_columns), g.where), []
-        ).append(g)
-    for (cols, where), group_analyzers in by_group.items():
-        try:
-            state = FrequencyBasedAnalyzer.compute_frequencies(
-                data, list(cols), where
-            )
-            stats = None
-            if any(not g.uses_full_frequencies for g in group_analyzers):
-                stats = FrequencyBasedAnalyzer.frequency_stats(state.frequencies)
-        except Exception as e:  # noqa: BLE001
-            for g in group_analyzers:
-                metrics[g] = g.to_failure_metric(e)
-            continue
-        for g in group_analyzers:
-            try:
-                if g.uses_full_frequencies:
-                    metrics[g] = g.compute_metric_from(state)
-                else:
-                    metrics[g] = g.metric_from_stats(*stats)
-            except Exception as e:  # noqa: BLE001
-                metrics[g] = g.to_failure_metric(e)
-
-    # 5. Anything else: standalone calculate.
+    # 4. MutualInformation (needs the full frequency table) and
+    #    non-fusing analyzers: standalone calculate.
     for a in others:
-        metrics[a] = a.calculate(data)
+        try:
+            metrics[a] = a.calculate(data)
+        except Exception as e:  # noqa: BLE001
+            metrics[a] = a.to_failure_metric(e)
 
     # Preserve input analyzer order in the context.
     ordered = {a: metrics[a] for a in todo if a in metrics}

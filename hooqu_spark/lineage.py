@@ -5,12 +5,13 @@ Implements for real the contract the reference threaded through every
 signature but stubbed (``aggregate_with``/``save_states_with`` hooks,
 ``hooqu/analyzers/analyzer.py:80-130``; ``verification_suite.py:121-122``):
 
-* ``compute_partition_states`` — ONE ``groupBy(partition_col).agg``
-  job evaluating every scan-shareable analyzer's aggregate expressions
-  per partition bucket; each bucket row becomes serialized monoid
-  states.  Frequency-based analyzers (Uniqueness, Distinctness,
-  CountDistinct, Entropy, ...) add one job per (columns, where) pair
-  whose per-bucket state is the bucket's frequency statistics.
+* ``compute_partition_states`` — the fused-state kernel
+  (:func:`hooqu_spark.analyzers.fused.fused_states`) grouped by the
+  partition column: ONE ``groupBy(partition_col).agg`` job for every
+  scan-shareable analyzer, plus one job per (columns, where) pair of
+  frequency-based analyzers (Uniqueness, Distinctness, CountDistinct,
+  Entropy, ...) whose per-bucket state is the bucket's frequency
+  statistics; each bucket's states are serialized as JSON.
 * ``merge_states`` — driver-side monoid fold across buckets; by
   construction ``metric(merge(states)) == metric(whole table)`` for
   sum/count/min/max/mean/stddev(Chan) states.  For frequency states it
@@ -30,17 +31,19 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 from dataclasses import dataclass
-from typing import Dict, List, Optional, Sequence, Tuple
+from typing import Dict, List, Optional, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from .analyzers.base import Analyzer, ScanShareableAnalyzer, apply_projections
-from .analyzers.grouping import FrequencyBasedAnalyzer, stats_from_row
+from .analyzers.base import Analyzer, ScanShareableAnalyzer
+from .analyzers.fused import fused_states, metric_from_state
+from .analyzers.grouping import FrequencyBasedAnalyzer
 from .metrics import DoubleMetric
-from .states import FrequencyStats, State, state_from_dict
+from .states import State, state_from_dict
 
 
 def analyzer_key(a: Analyzer) -> str:
@@ -63,87 +66,37 @@ def compute_partition_states(
     analyzers: Sequence[Analyzer],
     partition_col: str,
 ) -> List[StateRecord]:
-    """One groupBy job -> per-bucket states for all scan-shareable
-    analyzers, plus one job per (columns, where) pair of
-    frequency-based analyzers.
+    """Per-bucket states of every analyzer: the fused-state kernel
+    grouped by ``partition_col`` (one groupBy job for the scan-shareable
+    analyzers, one per (columns, where) pair of frequency-based ones).
+    A state that could not be computed is stored as ``"null"``.
 
-    A frequency-based analyzer's per-bucket state is the
-    :class:`~hooqu_spark.states.FrequencyStats` row of the bucket's
-    frequency table.  Those merge exactly only if no group spans two
-    buckets, so the CALLER must guarantee that ``partition_col`` is a
-    function of the analyzer's grouping columns (e.g. a hash of them).
-    Analyzers that need the full frequency table (MutualInformation)
-    are rejected.
+    Frequency states merge exactly only if no group spans two buckets:
+    the CALLER must guarantee that ``partition_col`` is a function of
+    the grouping columns (e.g. a hash of them).  MutualInformation is
+    rejected with ValueError.
 
-    Bucket ids are stored as SPARK-cast strings (grouping on
-    ``cast(partition_col as string)``), so the commit-log markers use
-    the same stringification the resume/idempotence filters apply
-    executor-side — a Python ``str()`` would disagree for e.g. boolean
-    buckets ('True' vs 'true') and silently break retry skipping."""
-    from pyspark.sql import functions as F
-
-    scan: List[ScanShareableAnalyzer] = []
-    by_pair: Dict[Tuple[Tuple[str, ...], Optional[str]], List[FrequencyBasedAnalyzer]] = {}
-    for a in analyzers:
-        if not isinstance(a, FrequencyBasedAnalyzer):
-            scan.append(a)
-        elif a.uses_full_frequencies:
-            raise ValueError(f"{a!r} has no per-partition state")
-        else:
-            by_pair.setdefault((tuple(a.grouping_columns), a.where), []).append(a)
-
-    bucket_id = F.col(partition_col).cast("string")
-    # bucket -> analyzer key -> serialized state
-    payloads: Dict[str, Dict[str, str]] = {}
-
-    if scan:
-        proj = apply_projections(df, scan)
-        slices: List[Tuple[ScanShareableAnalyzer, int, int]] = []
-        exprs = []
-        for a in scan:
-            ae = a.cached_aggregation_exprs(proj)
-            slices.append((a, len(exprs), len(exprs) + len(ae)))
-            exprs.extend(ae)
-        rows = (
-            proj.groupBy(bucket_id.alias(partition_col))
-            .agg(*(e.alias(f"_s{i}") for i, e in enumerate(exprs)))
-            .collect()
-        )
-        for row in rows:
-            values = list(row)
-            body = values[1:]
-            out = payloads.setdefault(str(values[0]), {})
-            for a, start, end in slices:
-                try:
-                    state = a.state_from_agg(body[start:end])
-                    out[analyzer_key(a)] = json.dumps(state.to_dict()) if state else "null"
-                except Exception:  # e.g. stddev with n=0 in an empty bucket
-                    out[analyzer_key(a)] = "null"
-
-    empty = json.dumps(FrequencyStats(0, 0, 0, 0.0, 0).to_dict())
-    for (cols, where), group in by_pair.items():
-        freq = FrequencyBasedAnalyzer.compute_frequencies(
-            df.withColumn(partition_col, bucket_id), cols, where, keys=[partition_col]
-        ).frequencies
-        rows = (
-            freq.groupBy(partition_col)
-            .agg(*FrequencyBasedAnalyzer.frequency_stats_exprs())
-            .collect()
-        )
-        stats = {str(r[0]): json.dumps(stats_from_row(r[1:]).to_dict()) for r in rows}
-        for bucket in stats:
-            payloads.setdefault(bucket, {})
-        # a bucket whose rows are all NULL (or filtered) on the group
-        # columns has no frequency rows: its state is the empty one
-        for bucket, out in payloads.items():
-            for a in group:
-                out[analyzer_key(a)] = stats.get(bucket, empty)
-
+    Bucket ids are Spark string casts, so the commit-log markers match
+    the resume/idempotence filters applied executor-side (a Python
+    ``str()`` would write 'True' for a boolean bucket Spark casts to
+    'true', silently breaking retry skipping)."""
     return [
-        StateRecord(bucket, k, payload)
-        for bucket, out in payloads.items()
-        for k, payload in out.items()
+        StateRecord(
+            bucket,
+            analyzer_key(a),
+            "null" if state is None or isinstance(state, Exception)
+            else json.dumps(state.to_dict()),
+        )
+        for bucket, states in fused_states(df, analyzers, partition_col).items()
+        for a, state in states.items()
     ]
+
+
+def _merge(prev: Optional[State], state: Optional[State]) -> Optional[State]:
+    """The monoid fold step; a missing (None) state is the identity."""
+    if prev is None:
+        return state
+    return prev if state is None else prev.sum(state)
 
 
 def merge_states(records: Sequence[StateRecord]) -> Dict[str, Optional[State]]:
@@ -155,11 +108,7 @@ def merge_states(records: Sequence[StateRecord]) -> Dict[str, Optional[State]]:
             if rec.state_json != "null"
             else None
         )
-        if rec.analyzer_key not in merged:
-            merged[rec.analyzer_key] = state
-        elif state is not None:
-            prev = merged[rec.analyzer_key]
-            merged[rec.analyzer_key] = state if prev is None else prev.sum(state)
+        merged[rec.analyzer_key] = _merge(merged.get(rec.analyzer_key), state)
     return merged
 
 
@@ -167,14 +116,11 @@ def metrics_from_states(
     analyzers: Sequence[Analyzer],
     merged: Dict[str, Optional[State]],
 ) -> Dict[Analyzer, DoubleMetric]:
-    out: Dict[Analyzer, DoubleMetric] = {}
-    for a in analyzers:
-        state = merged.get(analyzer_key(a))
-        try:
-            out[a] = a.compute_metric_from(state)
-        except Exception as e:  # noqa: BLE001
-            out[a] = a.to_failure_metric(e)
-    return out
+    """Each analyzer's metric from its entry in ``merged`` (keyed by
+    :func:`analyzer_key`; a missing entry is an empty state).  A state
+    that is an exception, or that fails to yield a metric, becomes a
+    Failure metric."""
+    return {a: metric_from_state(a, merged.get(analyzer_key(a))) for a in analyzers}
 
 
 class StateRepository:
@@ -206,6 +152,12 @@ class StateRepository:
         final = os.path.join(d, f"states_{uuid.uuid4().hex}.parquet")
         pdf.to_parquet(tmp, index=False)
         os.rename(tmp, final)  # atomic commit
+
+    def clear(self, run_id: str) -> None:
+        """Drop every committed state of ``run_id`` (a fresh log)."""
+        d = self._run_dir(run_id)
+        if os.path.isdir(d):
+            shutil.rmtree(d)
 
     def load(self, run_id: str) -> List[StateRecord]:
         d = self._run_dir(run_id)
@@ -242,18 +194,28 @@ def metrics_by_group(
     ``groupBy(group_col).agg`` job (e.g. quality metrics per language
     over a webtext corpus).  Returns {group_value: {analyzer: metric}}.
 
-    Same machinery as per-bucket lineage states — the group's state row
-    IS a valid mergeable state, so per-group and whole-dataset metrics
-    stay consistent by construction."""
-    records = compute_partition_states(df, list(analyzers), group_col)
-    by_group: Dict[str, List[StateRecord]] = {}
-    for r in records:
-        by_group.setdefault(r.bucket, []).append(r)
-    out: Dict[str, Dict[Analyzer, DoubleMetric]] = {}
-    for group, recs in sorted(by_group.items()):
-        merged = merge_states(recs)
-        out[group] = metrics_from_states(analyzers, merged)
-    return out
+    The groups' states come from the same kernel call as per-bucket
+    lineage states (:func:`~hooqu_spark.analyzers.fused.fused_states`),
+    so per-group and whole-dataset metrics stay consistent by
+    construction."""
+    per_group = fused_states(df, analyzers, group_col)
+    return {
+        group: metrics_from_states(
+            analyzers, {analyzer_key(a): s for a, s in states.items()}
+        )
+        for group, states in sorted(per_group.items())
+    }
+
+
+def _reject_frequency_analyzers(analyzers: Sequence[Analyzer]) -> None:
+    """Ingest batches are not a hash of any grouping columns, so
+    per-batch frequency statistics do not merge (a value seen in two
+    batches would count as unique in both)."""
+    for a in analyzers:
+        if isinstance(a, FrequencyBasedAnalyzer):
+            raise ValueError(
+                f"incremental metrics require scan-shareable analyzers, got {a!r}"
+            )
 
 
 def incremental_metrics(
@@ -289,6 +251,7 @@ def incremental_metrics(
        bucket id for them (e.g. ``coalesce(day, ingest_batch_id)``)
        before calling this.
     """
+    _reject_frequency_analyzers(analyzers)
     committed = repository.committed_buckets(run_id)
     if committed:
         from pyspark.sql import functions as F

@@ -212,7 +212,9 @@ def run_pipeline(
     dynamic partition overwrite (idempotent), (2) bucket states
     committed to the StateRepository (the durable "done" marker).
     Crash between (1) and (2) -> bucket is reprocessed and its
-    partition overwritten; no duplicates, no loss.
+    partition overwritten; no duplicates, no loss.  ``resume=False``
+    first deletes the run's committed states, so every checkpointed
+    bucket is recomputed and merged once.
     """
     repo = StateRepository(f"{work_dir}/states")
     enriched_dir = f"{work_dir}/enriched/{run_id}"
@@ -221,7 +223,11 @@ def run_pipeline(
     # one per-bucket states job serves the lineage metrics and the gate
     analyzers = list(dict.fromkeys([*lineage_analyzers(rules), *gate]))
 
-    prior = repo.load(run_id) if resume else []
+    if not resume:
+        # a fresh log: records beside the old ones would double-count
+        # on a later resume
+        repo.clear(run_id)
+    prior = repo.load(run_id)
     committed = sorted({r.bucket for r in prior})
 
     bucketed = pages.withColumn(

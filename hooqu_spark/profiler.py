@@ -2,13 +2,14 @@
 ``ColumnProfilerRunner`` / ``ConstraintSuggestionRunner`` surface;
 absent from the reference).
 
-Pass structure mirrors Deequ's three-pass design, executed with this
-engine's fused runner so each pass is ONE Spark job:
+Pass structure mirrors Deequ's three-pass design, each pass ONE Spark
+job:
 
 * pass 1 — generic + type-specific statistics for every profiled
-  column in a single fused ``df.agg`` scan (completeness, approx
-  distinct count, min/max/mean/stddev for numerics, min/max length +
-  type inference for strings).
+  column in a single fused ``df.agg`` scan from the fused-state kernel
+  (:func:`hooqu_spark.analyzers.fused.fused_states`): completeness,
+  approx distinct count, min/max/mean/stddev for numerics, min/max
+  length + type inference for strings.
 * pass 2 — (only for columns nominated by pass 1) exact value
   histograms for low-cardinality columns AND exact uniqueness
   confirmation for key candidates, fused into ONE exploded
@@ -42,10 +43,10 @@ from .analyzers import (
 from .analyzers.base import (
     Analyzer,
     ScanShareableAnalyzer,
-    apply_projections,
     sql_ident as _ident,
     sql_str_lit as _slit,
 )
+from .analyzers.fused import fused_states
 from .checks import Check, CheckLevel
 from .metrics import Entity
 from .states import NumMatches
@@ -108,12 +109,6 @@ class ColumnProfile:
     looks_unique: bool = False
 
 
-def _value(metric) -> Optional[float]:
-    if metric is None or metric.value.isFailure:
-        return None
-    return float(metric.value.get())
-
-
 def profile_columns(
     df: DataFrame,
     columns: Optional[Sequence[str]] = None,
@@ -148,26 +143,14 @@ def profile_columns(
         per_col[c] = a
         analyzers.extend(a.values())
 
-    # pass 1: ONE fused df.agg evaluating every analyzer's aggregate
-    # expressions — including the DataTypeHistogram bucket counts, which
-    # used to run as a second full-scan job because do_analysis_run only
-    # surfaces metrics; here we slice the fused row into per-analyzer
-    # STATES directly (same mechanism as the lineage runner).
-    agg_input = apply_projections(df, analyzers)
-    slices: List[tuple] = []
-    exprs: List = []
-    for a in analyzers:
-        ae = a.cached_aggregation_exprs(agg_input)
-        slices.append((a, len(exprs), len(exprs) + len(ae)))
-        exprs.extend(ae)
-    # positional consumption -> no .alias() py4j round trips
-    row = list(agg_input.agg(*exprs).first())
-    states: Dict[Analyzer, object] = {}
-    for a, start, end in slices:
-        try:
-            states[a] = a.state_from_agg(row[start:end])
-        except Exception:  # e.g. stddev over an all-null column
-            states[a] = None
+    # pass 1: ONE fused df.agg from the fused-state kernel, evaluating
+    # every analyzer's aggregate expressions — including the
+    # DataTypeHistogram bucket counts, whose STATE (not just metric) the
+    # profile needs.  A state that could not be computed is None.
+    states: Dict[Analyzer, object] = {
+        a: None if isinstance(s, Exception) else s
+        for a, s in fused_states(df, analyzers)[None].items()
+    }
 
     def _state_value(analyzer: Analyzer) -> Optional[float]:
         state = states.get(analyzer)

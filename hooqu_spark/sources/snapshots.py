@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..analyzers.base import ScanShareableAnalyzer
-from ..lineage import StateRepository, incremental_metrics
+from ..lineage import StateRepository, _reject_frequency_analyzers, incremental_metrics
 
 SNAPSHOT_COL = "_hooqu_snapshot"
 
@@ -191,6 +191,7 @@ def ingest_snapshots(
     already in the commit log is skipped even if re-listed (crash
     between jobs, retried driver) — the per-partition states make the
     whole loop idempotent."""
+    _reject_frequency_analyzers(analyzers)
     committed = set(repository.committed_buckets(run_id))
     new_ids: List[str] = []
     metrics = None

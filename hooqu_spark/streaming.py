@@ -4,9 +4,13 @@ stream.
 The reference planned incremental metric computation but never built it
 (``README.rst:154-156``, stubbed ``aggregate_with`` hooks).  On Spark
 the monoid states make it natural: each micro-batch contributes one
-fused-scan state vector; the accumulator folds batches with the same
-merge ops the lineage layer uses, so cumulative metrics after N batches
-equal the metrics of the concatenated data — without reprocessing.
+state per analyzer from the fused-state kernel
+(:func:`hooqu_spark.analyzers.fused.fused_states`, one scan job); the
+accumulator folds batches with the lineage layer's merge, so cumulative
+metrics after N batches equal the metrics of the concatenated data —
+without reprocessing.  ``WindowedMetrics`` runs the kernel's lazy half
+(:func:`~hooqu_spark.analyzers.fused.fused_aggregation`) inside a
+streaming windowed aggregation.
 
 Only scan-shareable analyzers participate (grouping analyzers would
 need their frequency tables persisted per batch — use the batch
@@ -24,17 +28,25 @@ Usage::
 from __future__ import annotations
 
 import threading
-from typing import Callable, Dict, List, Optional, Sequence
+from typing import Callable, Dict, Optional, Sequence
 
 from pyspark.sql import DataFrame
 
-from .analyzers.base import Analyzer, ScanShareableAnalyzer, apply_projections
+from .analyzers.base import Analyzer, ScanShareableAnalyzer
+from .analyzers.fused import fused_aggregation, fused_states
 from .analyzers.runner import AnalyzerContext
 from .checks import Check
-from .lineage import analyzer_key
+from .lineage import _merge, analyzer_key, metrics_from_states
 from .metrics import DoubleMetric
 from .states import State
 from .verification_suite import VerificationResult, VerificationSuite
+
+
+def _scan_shareable(analyzers: Sequence[Analyzer], what: str) -> list:
+    for a in analyzers:
+        if not isinstance(a, ScanShareableAnalyzer):
+            raise TypeError(f"{what}: analyzers must be scan-shareable, got {a!r}")
+    return list(analyzers)
 
 
 class StreamingVerification:
@@ -44,13 +56,7 @@ class StreamingVerification:
         checks: Sequence[Check] = (),
         on_batch: Optional[Callable[[int, VerificationResult], None]] = None,
     ):
-        for a in analyzers:
-            if not isinstance(a, ScanShareableAnalyzer):
-                raise TypeError(
-                    f"streaming verification requires scan-shareable "
-                    f"analyzers, got {a!r}"
-                )
-        self.analyzers = list(analyzers)
+        self.analyzers = _scan_shareable(analyzers, "streaming verification")
         self.checks = list(checks)
         self.on_batch = on_batch
         self._lock = threading.Lock()
@@ -60,42 +66,17 @@ class StreamingVerification:
 
     # -- state folding -------------------------------------------------------
     def _fold_batch(self, batch_df: DataFrame) -> None:
-        batch_df = apply_projections(batch_df, self.analyzers)
-        slices = []
-        exprs = []
-        for a in self.analyzers:
-            ae = a.cached_aggregation_exprs(batch_df)
-            slices.append((a, len(exprs), len(exprs) + len(ae)))
-            exprs.extend(ae)
-        row = list(
-            batch_df.agg(
-                *(e.alias(f"_b{i}") for i, e in enumerate(exprs))
-            ).first()
-        )
+        states = fused_states(batch_df, self.analyzers)[None]
         with self._lock:
-            for a, start, end in slices:
+            for a, state in states.items():
                 key = analyzer_key(a)
-                try:
-                    state = a.state_from_agg(row[start:end])
-                except Exception:
-                    state = None
-                prev = self._states.get(key)
-                if prev is None:
-                    self._states[key] = state
-                elif state is not None:
-                    self._states[key] = prev.sum(state)
+                state = None if isinstance(state, Exception) else state
+                self._states[key] = _merge(self._states.get(key), state)
             self._batches += 1
 
     def current_metrics(self) -> Dict[Analyzer, DoubleMetric]:
         with self._lock:
-            out: Dict[Analyzer, DoubleMetric] = {}
-            for a in self.analyzers:
-                state = self._states.get(analyzer_key(a))
-                try:
-                    out[a] = a.compute_metric_from(state)
-                except Exception as e:  # noqa: BLE001
-                    out[a] = a.to_failure_metric(e)
-            return out
+            return metrics_from_states(self.analyzers, self._states)
 
     def batches_processed(self) -> int:
         with self._lock:
@@ -121,8 +102,9 @@ class WindowedMetrics:
     """Event-time windowed data-quality metrics with late-data handling.
 
     Spark-first design: the fused analyzer aggregation expressions
-    (the same ones the batch runner compiles) run inside a native
-    Structured Streaming windowed aggregation::
+    (the kernel's lazy half, ``fused_aggregation``, the same plan the
+    batch runner collects) run inside a native Structured Streaming
+    windowed aggregation::
 
         stream.withWatermark(ts, delay)
               .groupBy(window(ts, size))
@@ -150,13 +132,7 @@ class WindowedMetrics:
         watermark_delay: str = "0 seconds",
         slide_duration: Optional[str] = None,
     ):
-        for a in analyzers:
-            if not isinstance(a, ScanShareableAnalyzer):
-                raise TypeError(
-                    f"windowed metrics require scan-shareable analyzers,"
-                    f" got {a!r}"
-                )
-        self.analyzers = list(analyzers)
+        self.analyzers = _scan_shareable(analyzers, "windowed metrics")
         self.ts_col = ts_col
         self.window_duration = window_duration
         self.watermark_delay = watermark_delay
@@ -167,42 +143,30 @@ class WindowedMetrics:
     def _aggregated(self, stream_df: DataFrame) -> DataFrame:
         from pyspark.sql import functions as F
 
-        stream_df = apply_projections(stream_df, self.analyzers)
-        slices = []
-        exprs = []
-        for a in self.analyzers:
-            ae = a.cached_aggregation_exprs(stream_df)
-            slices.append((a, len(exprs), len(exprs) + len(ae)))
-            exprs.extend(ae)
-        self._slices = slices
         win = (
             F.window(self.ts_col, self.window_duration, self.slide_duration)
             if self.slide_duration
             else F.window(self.ts_col, self.window_duration)
         )
-        return (
-            stream_df.withWatermark(self.ts_col, self.watermark_delay)
-            .groupBy(win.alias("_w"))
-            .agg(*(e.alias(f"_w{i}") for i, e in enumerate(exprs)))
+        plan, self._states_of = fused_aggregation(
+            stream_df.withWatermark(self.ts_col, self.watermark_delay),
+            self.analyzers,
+            [win.alias("_w")],
         )
+        return plan
 
     def _upsert_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         rows = batch_df.collect()
         with self._lock:
             for row in rows:
                 key = (row["_w"]["start"], row["_w"]["end"])
-                body = list(row)[1:]
-                states: Dict[str, Optional[State]] = {}
-                for a, start, end in self._slices:
-                    try:
-                        states[analyzer_key(a)] = a.state_from_agg(
-                            body[start:end]
-                        )
-                    except Exception:  # e.g. empty-window stddev
-                        states[analyzer_key(a)] = None
+                states = self._states_of(list(row)[1:])
                 # streaming state store already holds the cumulative
                 # aggregate -> an update REPLACES the window's states
-                self._windows[key] = states
+                self._windows[key] = {
+                    analyzer_key(a): None if isinstance(s, Exception) else s
+                    for a, s in states.items()
+                }
 
     def attach(self, stream_df: DataFrame):
         """Return a DataStreamWriter (output mode ``update``) with
@@ -214,17 +178,10 @@ class WindowedMetrics:
 
     def window_metrics(self) -> Dict[tuple, Dict[Analyzer, DoubleMetric]]:
         with self._lock:
-            out: Dict[tuple, Dict[Analyzer, DoubleMetric]] = {}
-            for key, states in sorted(self._windows.items()):
-                per: Dict[Analyzer, DoubleMetric] = {}
-                for a in self.analyzers:
-                    state = states.get(analyzer_key(a))
-                    try:
-                        per[a] = a.compute_metric_from(state)
-                    except Exception as e:  # noqa: BLE001
-                        per[a] = a.to_failure_metric(e)
-                out[key] = per
-            return out
+            return {
+                key: metrics_from_states(self.analyzers, states)
+                for key, states in sorted(self._windows.items())
+            }
 
 
 def streaming_dedup(

@@ -42,7 +42,9 @@ def main(argv=None) -> int:
     p.add_argument("--run-id", default="run")
     p.add_argument("--buckets", type=int, default=64,
                    help="url-hash bucket count (resume + skew granularity)")
-    p.add_argument("--no-resume", action="store_true")
+    p.add_argument("--no-resume", action="store_true",
+                   help="delete the run id's committed states and "
+                        "recompute every checkpointed bucket")
     args = p.parse_args(argv)
 
     from pyspark.sql import SparkSession

@@ -10,9 +10,11 @@ from hooqu_spark.analyzers import (
     Minimum,
     Size,
     StandardDeviation,
+    Uniqueness,
     do_analysis_run,
 )
 from hooqu_spark.lineage import StateRepository, incremental_metrics
+from hooqu_spark.sources import ParquetBatchSource, ingest_snapshots
 
 
 def test_three_daily_ingests_equal_full_scan(spark, tmp_path):
@@ -138,3 +140,18 @@ def test_boolean_bucket_retry_is_idempotent(spark, tmp_path):
     again = incremental_metrics(repo, "r", analyzers, b1, "flag")
     assert first[analyzers[0]].value.get() == 2.0
     assert again[analyzers[0]].value.get() == 2.0
+
+
+def test_frequency_analyzers_are_rejected(spark, tmp_path):
+    # Buckets are ingest batches, not a hash of the grouping columns, so
+    # per-batch frequency statistics do not merge: Uniqueness(id) over
+    # days {1, 2} and {1, 3} would merge to 1.0 instead of 0.5.
+    repo = StateRepository(str(tmp_path / "states"))
+    d1 = spark.createDataFrame([("d1", 1), ("d1", 2)], "day string, id long")
+    with pytest.raises(ValueError, match="scan-shareable"):
+        incremental_metrics(repo, "run", [Size(), Uniqueness(["id"])], d1, "day")
+    assert repo.load("run") == []
+
+    src = ParquetBatchSource(str(tmp_path / "batches"))
+    with pytest.raises(ValueError, match="scan-shareable"):
+        ingest_snapshots(spark, src, repo, "run", [Uniqueness(["id"])])

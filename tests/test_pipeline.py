@@ -266,6 +266,19 @@ class TestPipelineEndToEnd:
         assert "no committed state for buckets" in str(metric.value.exception)
         assert result.verification.status == CheckStatus.ERROR
 
+    def test_no_resume_starts_a_fresh_state_log(self, spark, pages, tmp_path):
+        from hooqu_spark.analyzers import Size
+
+        work = str(tmp_path / "work")
+        run_pipeline(spark, pages, work, run_id="r", n_buckets=8)
+        rerun = run_pipeline(spark, pages, work, run_id="r", n_buckets=8, resume=False)
+        assert len(rerun.processed_buckets) == 8
+        # a later resume merges every bucket's states exactly once
+        result = run_pipeline(spark, pages, work, run_id="r", n_buckets=8)
+        assert result.processed_buckets == []
+        assert result.metrics[Size()].value.get() == result.enriched.count()
+        assert_gate_equals_scan(result)
+
     def test_empty_input_fails_the_gate(self, spark, pages, tmp_path):
         result = run_pipeline(spark, pages.limit(0), str(tmp_path / "work"), n_buckets=8)
         assert result.verification.status == CheckStatus.ERROR

@@ -195,3 +195,84 @@ def test_frequency_states_merge_equals_whole(spark, seed):
 
     with pytest.raises(ValueError):
         compute_partition_states(df, [MutualInformation(["att1", "att2"])], "bucket")
+
+
+def _lineage_metrics(df, analyzers):
+    from pyspark.sql import functions as F
+
+    from hooqu_spark.lineage import (
+        compute_partition_states,
+        merge_states,
+        metrics_from_states,
+    )
+
+    bucketed = df.withColumn("bucket", F.pmod(F.xxhash64("id"), F.lit(4)))
+    records = compute_partition_states(bucketed, analyzers, "bucket")
+    return metrics_from_states(analyzers, merge_states(records))
+
+
+def _by_group_metrics(df, analyzers):
+    from pyspark.sql import functions as F
+
+    from hooqu_spark.lineage import metrics_by_group
+
+    per_group = metrics_by_group(df.withColumn("g", F.lit(1)), analyzers, "g")
+    assert list(per_group) == ["1"]
+    return per_group["1"]
+
+
+def _streaming_metrics(df, analyzers):
+    from hooqu_spark.streaming import StreamingVerification
+
+    acc = StreamingVerification(analyzers)
+    acc.process_batch(df.where("item % 2 = 0"), 0)
+    acc.process_batch(df.where("item % 2 = 1"), 1)
+    return acc.current_metrics()
+
+
+@pytest.mark.parametrize("seed", SEEDS[:2])
+@pytest.mark.parametrize(
+    "caller, frequency_allowed",
+    [
+        (_lineage_metrics, True),
+        (_by_group_metrics, True),
+        (_streaming_metrics, False),
+    ],
+    ids=["lineage", "metrics_by_group", "streaming"],
+)
+def test_callers_agree_with_the_runner(spark, seed, caller, frequency_allowed):
+    """Every caller of the fused-state kernel yields the runner's
+    metrics on the same frame."""
+    from pyspark.sql import functions as F
+
+    from hooqu_spark.analyzers import Compliance
+
+    pdf = random_frame(seed, 90)
+    df = spark.createDataFrame(pdf.astype({"att1": "float64"})).withColumn(
+        "id", F.col("item") % 37
+    )
+    analyzers = [
+        Size(),
+        Completeness("att1"),
+        Completeness("att2"),
+        Minimum("att1"),
+        Maximum("att1"),
+        Sum("att1"),
+        Mean("att1"),
+        StandardDeviation("att1"),
+        Compliance("positive", "att1 > 0", where="att2 is not null"),
+    ]
+    if frequency_allowed:
+        analyzers.append(Uniqueness(["id"]))
+
+    want = do_analysis_run(df, analyzers)
+    got = caller(df, analyzers)
+    for a in analyzers:
+        w, g = want.metric(a).value, got[a].value
+        assert g.isFailure == w.isFailure, repr(a)
+        if w.isFailure:
+            continue
+        if math.isnan(w.get()):
+            assert math.isnan(g.get()), repr(a)
+        else:
+            assert g.get() == pytest.approx(w.get(), rel=1e-9, abs=1e-12), repr(a)
