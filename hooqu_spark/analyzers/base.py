@@ -386,11 +386,11 @@ class ScanShareableAnalyzer(Analyzer):
         return cols
 
     def compute_state_from(self, data: DataFrame) -> Optional[State]:
-        from .fused import fused_states
+        from .fused import UnbuildableAnalyzer, fused_states
 
         state = fused_states(data, [self])[None][self]
         if isinstance(state, Exception):
-            raise state
+            raise state.error if isinstance(state, UnbuildableAnalyzer) else state
         return state
 
     def compute_metric_from(self, state: Optional[State]) -> DoubleMetric:

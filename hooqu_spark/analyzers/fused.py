@@ -6,10 +6,13 @@ scan-shareable analyzer into ONE ``agg`` (or ``groupBy(by).agg``) job
 and slices its rows into states; scalar frequency-based analyzers add
 one job per ``(columns, where)`` pair, reduced to ``FrequencyStats``.
 The runner, profiler, lineage and streaming all call it;
-:func:`fused_aggregation` is its lazy half, for streaming plans.  An
-analyzer whose expressions cannot be built, or whose state cannot be
-sliced, gets the exception in place of its state: one bad analyzer
-never fails the shared job.
+:func:`fused_aggregation` is its lazy half, for streaming plans.
+
+One bad analyzer never fails the shared job: an analyzer whose
+expressions (or frequency table) cannot be built gets an
+:class:`UnbuildableAnalyzer` in place of its state, and one whose state
+cannot be sliced from the row (e.g. stddev of zero rows) gets the
+exception ``state_from_agg`` raised.  A failing Spark job raises.
 """
 
 from __future__ import annotations
@@ -30,10 +33,21 @@ StateOrError = Union[State, None, Exception]
 _GROUP = "_hooqu_group"
 
 
+class UnbuildableAnalyzer(Exception):
+    """In place of a state: the analyzer's aggregate expressions, or its
+    frequency table, could not be built.  ``error`` is why."""
+
+    def __init__(self, error: Exception):
+        super().__init__(str(error))
+        self.error = error
+
+
 def metric_from_state(analyzer: Analyzer, state: StateOrError) -> DoubleMetric:
     """The analyzer's metric; an exception in place of the state, or one
     raised computing the metric, becomes a Failure metric."""
     try:
+        if isinstance(state, UnbuildableAnalyzer):
+            raise state.error
         if isinstance(state, Exception):
             raise state
         return analyzer.compute_metric_from(state)
@@ -41,27 +55,36 @@ def metric_from_state(analyzer: Analyzer, state: StateOrError) -> DoubleMetric:
         return analyzer.to_failure_metric(e)
 
 
+def state_or_none(state: StateOrError) -> Optional[State]:
+    """The state to store or fold: an unbuildable analyzer raises its
+    error, and a state that could not be sliced is None."""
+    if isinstance(state, UnbuildableAnalyzer):
+        raise state.error
+    return None if isinstance(state, Exception) else state
+
+
 def fused_aggregation(
     df: DataFrame, analyzers: Sequence[ScanShareableAnalyzer], keys: Sequence[Column] = ()
-) -> Tuple[Optional[DataFrame], Callable[[Sequence], Dict[Analyzer, StateOrError]]]:
+) -> Tuple[Optional[DataFrame], Callable, Dict[Analyzer, StateOrError]]:
     """The aggregated plan, one row per ``keys`` group (``None`` when no
-    expression could be built), and the function from a row's values
-    after the keys to ``{analyzer: state or exception}``."""
+    expression could be built); the function from a row's values after
+    the keys to ``{analyzer: state or exception}``; and the analyzers
+    left out of the plan because their expressions could not be built."""
     proj = apply_projections(df, analyzers)
-    failed: Dict[Analyzer, StateOrError] = {}
+    unbuilt: Dict[Analyzer, StateOrError] = {}
     slices: List[Tuple[ScanShareableAnalyzer, int, int]] = []
     exprs: List[Column] = []
     for a in analyzers:
         try:
             ae = a.cached_aggregation_exprs(proj)
         except Exception as e:  # noqa: BLE001 - unresolvable expression
-            failed[a] = e
+            unbuilt[a] = UnbuildableAnalyzer(e)
             continue
         slices.append((a, len(exprs), len(exprs) + len(ae)))
         exprs.extend(ae)
 
     def states_of(values: Sequence) -> Dict[Analyzer, StateOrError]:
-        states = dict(failed)
+        states: Dict[Analyzer, StateOrError] = {}
         for a, start, end in slices:
             try:
                 states[a] = a.state_from_agg(values[start:end])
@@ -71,7 +94,7 @@ def fused_aggregation(
 
     # no aliases: rows are consumed positionally, and each .alias() is
     # a py4j round trip (54 exprs ~= 0.1 s of driver time per job)
-    return (proj.groupBy(*keys).agg(*exprs) if exprs else None), states_of
+    return (proj.groupBy(*keys).agg(*exprs) if exprs else None), states_of, unbuilt
 
 
 def fused_states(
@@ -79,7 +102,8 @@ def fused_states(
 ) -> Dict[Optional[str], Dict[Analyzer, StateOrError]]:
     """``{group: {analyzer: state or exception}}``.  With ``by=None``
     the only group is ``None``; otherwise groups are the Spark string
-    casts of column ``by`` (a NULL group is ``"None"``).
+    casts of column ``by`` (a NULL group is ``"None"``), and a frame
+    with no rows has no groups.
 
     A frequency analyzer's state for a group is the FrequencyStats of
     that group's rows (empty if it has none), so merging them across
@@ -103,12 +127,10 @@ def fused_states(
         return str(row[0]) if n_keys else None
 
     out: Dict[Optional[str], Dict[Analyzer, StateOrError]] = {} if n_keys else {None: {}}
-    failed: Dict[Analyzer, StateOrError] = {}
+    unbuilt: Dict[Analyzer, StateOrError] = {}
     if scan:
-        plan, states_of = fused_aggregation(df, scan, key_cols)
-        if plan is None:  # no expression could be built: no job
-            failed = states_of(())
-        else:
+        plan, states_of, unbuilt = fused_aggregation(df, scan, key_cols)
+        if plan is not None:
             for row in plan.collect() if n_keys else [plan.first()]:
                 out[group_of(row)] = states_of(list(row)[n_keys:])
 
@@ -119,21 +141,17 @@ def fused_states(
     for (cols, where), group in pairs.items():
         try:
             freq = FrequencyBasedAnalyzer.compute_frequencies(keyed, cols, where, keys=keys)
-            rows = (
-                freq.frequencies.groupBy(*keys)
-                .agg(*FrequencyBasedAnalyzer.frequency_stats_exprs())
-                .collect()
+            plan = freq.frequencies.groupBy(*keys).agg(
+                *FrequencyBasedAnalyzer.frequency_stats_exprs()
             )
-            stats: Union[Dict, Exception] = {
-                group_of(r): stats_from_row(list(r)[n_keys:]) for r in rows
-            }
-            for g in stats:
-                out.setdefault(g, {})
         except Exception as e:  # noqa: BLE001 - e.g. an invalid where
-            stats = e
+            unbuilt.update((a, UnbuildableAnalyzer(e)) for a in group)
+            continue
+        stats = {group_of(r): stats_from_row(list(r)[n_keys:]) for r in plan.collect()}
+        for g in stats:
+            out.setdefault(g, {})
         for g, states in out.items():
-            s = stats if isinstance(stats, Exception) else stats.get(g, empty)
-            states.update((a, s) for a in group)
+            states.update((a, stats.get(g, empty)) for a in group)
     for states in out.values():
-        states.update(failed)
+        states.update(unbuilt)
     return out

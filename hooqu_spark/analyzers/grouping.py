@@ -79,9 +79,9 @@ class FrequenciesAndNumRows(State):
 class FrequencyBasedAnalyzer(Analyzer):
     """Base for analyzers over group frequencies."""
 
-    #: True for analyzers whose metric needs the full frequency table
-    #: (not just the shared scalar statistics) — the runner then calls
-    #: ``compute_metric_from(state)`` instead of ``metric_from_stats``.
+    #: True for analyzers whose metric needs the full frequency table,
+    #: not just the shared scalar statistics: they have no mergeable
+    #: state, and the runner calculates them standalone.
     uses_full_frequencies = False
 
     def __init__(self, name: str, cols_to_group_on: Sequence[str],

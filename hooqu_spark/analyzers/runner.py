@@ -122,25 +122,30 @@ def do_analysis_run(
         else:
             passed.append(a)
 
-    fused: List[Analyzer] = []
+    scan: List[ScanShareableAnalyzer] = []
     counts: Dict[Quantile, _QuantileCount] = {}
+    pairs: Dict[Tuple[Tuple[str, ...], Optional[str]], List[FrequencyBasedAnalyzer]] = {}
     others: List[Analyzer] = []
     for a in passed:
         if isinstance(a, Quantile):
             counts[a] = _QuantileCount(a)
-            fused.append(counts[a])
-        elif (
-            isinstance(a, ScanShareableAnalyzer) and a.fuses_into_scan
-        ) or (
-            isinstance(a, FrequencyBasedAnalyzer) and not a.uses_full_frequencies
-        ):
-            fused.append(a)
+            scan.append(counts[a])
+        elif isinstance(a, ScanShareableAnalyzer) and a.fuses_into_scan:
+            scan.append(a)
+        elif isinstance(a, FrequencyBasedAnalyzer) and not a.uses_full_frequencies:
+            pairs.setdefault((tuple(a.grouping_columns), a.where), []).append(a)
         else:
             others.append(a)
 
     # 2. The fused scan (with the exact quantiles' phase-1 counts) and
-    #    one frequency job per (columns, where) pair.
-    states = fused_states(data, fused)[None] if fused else {}
+    #    one frequency job per (columns, where) pair; a failed frequency
+    #    job fails only the analyzers on its pair.
+    states = fused_states(data, scan)[None] if scan else {}
+    for group in pairs.values():
+        try:
+            states.update(fused_states(data, group)[None])
+        except Exception as e:  # noqa: BLE001
+            states.update((a, e) for a in group)
     for a, state in states.items():
         if not isinstance(a, _QuantileCount):
             metrics[a] = metric_from_state(a, state)

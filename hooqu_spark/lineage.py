@@ -40,7 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from .analyzers.base import Analyzer, ScanShareableAnalyzer
-from .analyzers.fused import fused_states, metric_from_state
+from .analyzers.fused import fused_states, metric_from_state, state_or_none
 from .analyzers.grouping import FrequencyBasedAnalyzer
 from .metrics import DoubleMetric
 from .states import State, state_from_dict
@@ -69,7 +69,10 @@ def compute_partition_states(
     """Per-bucket states of every analyzer: the fused-state kernel
     grouped by ``partition_col`` (one groupBy job for the scan-shareable
     analyzers, one per (columns, where) pair of frequency-based ones).
-    A state that could not be computed is stored as ``"null"``.
+    A state that could not be sliced (e.g. stddev of a bucket with no
+    matching rows) is stored as ``"null"``; an analyzer whose
+    expressions cannot be built, or a failed Spark job, raises, so no
+    bucket is committed without its states.
 
     Frequency states merge exactly only if no group spans two buckets:
     the CALLER must guarantee that ``partition_col`` is a function of
@@ -80,16 +83,13 @@ def compute_partition_states(
     the resume/idempotence filters applied executor-side (a Python
     ``str()`` would write 'True' for a boolean bucket Spark casts to
     'true', silently breaking retry skipping)."""
-    return [
-        StateRecord(
-            bucket,
-            analyzer_key(a),
-            "null" if state is None or isinstance(state, Exception)
-            else json.dumps(state.to_dict()),
-        )
-        for bucket, states in fused_states(df, analyzers, partition_col).items()
-        for a, state in states.items()
-    ]
+    records = []
+    for bucket, states in fused_states(df, analyzers, partition_col).items():
+        for a, state in states.items():
+            state = state_or_none(state)
+            payload = "null" if state is None else json.dumps(state.to_dict())
+            records.append(StateRecord(bucket, analyzer_key(a), payload))
+    return records
 
 
 def _merge(prev: Optional[State], state: Optional[State]) -> Optional[State]:
@@ -118,8 +118,7 @@ def metrics_from_states(
 ) -> Dict[Analyzer, DoubleMetric]:
     """Each analyzer's metric from its entry in ``merged`` (keyed by
     :func:`analyzer_key`; a missing entry is an empty state).  A state
-    that is an exception, or that fails to yield a metric, becomes a
-    Failure metric."""
+    that fails to yield a metric becomes a Failure metric."""
     return {a: metric_from_state(a, merged.get(analyzer_key(a))) for a in analyzers}
 
 
@@ -137,6 +136,10 @@ class StateRepository:
         self.root = root
 
     def _run_dir(self, run_id: str) -> str:
+        """``<root>/<run_id>``; ``run_id`` must name one directory, so
+        that ``clear`` never deletes above or beside its own run."""
+        if run_id in ("", ".", "..") or os.path.basename(run_id) != run_id:
+            raise ValueError(f"run_id must be a plain directory name, got {run_id!r}")
         return os.path.join(self.root, run_id)
 
     def save(self, run_id: str, records: Sequence[StateRecord]) -> None:
@@ -163,18 +166,12 @@ class StateRepository:
         d = self._run_dir(run_id)
         if not os.path.isdir(d):
             return []
-        frames = [
-            pd.read_parquet(os.path.join(d, f))
+        return [
+            StateRecord(row.bucket, row.analyzer_key, row.state_json)
             for f in sorted(os.listdir(d))
             if f.startswith("states_") and f.endswith(".parquet")
+            for row in pd.read_parquet(os.path.join(d, f)).itertuples(index=False)
         ]
-        records: List[StateRecord] = []
-        for pdf in frames:
-            for row in pdf.itertuples(index=False):
-                records.append(
-                    StateRecord(row.bucket, row.analyzer_key, row.state_json)
-                )
-        return records
 
     def committed_buckets(self, run_id: str) -> List[str]:
         return sorted({r.bucket for r in self.load(run_id)})
@@ -201,7 +198,7 @@ def metrics_by_group(
     per_group = fused_states(df, analyzers, group_col)
     return {
         group: metrics_from_states(
-            analyzers, {analyzer_key(a): s for a, s in states.items()}
+            analyzers, {analyzer_key(a): state_or_none(s) for a, s in states.items()}
         )
         for group, states in sorted(per_group.items())
     }

@@ -46,7 +46,7 @@ from .analyzers.base import (
     sql_ident as _ident,
     sql_str_lit as _slit,
 )
-from .analyzers.fused import fused_states
+from .analyzers.fused import fused_states, state_or_none
 from .checks import Check, CheckLevel
 from .metrics import Entity
 from .states import NumMatches
@@ -146,10 +146,9 @@ def profile_columns(
     # pass 1: ONE fused df.agg from the fused-state kernel, evaluating
     # every analyzer's aggregate expressions — including the
     # DataTypeHistogram bucket counts, whose STATE (not just metric) the
-    # profile needs.  A state that could not be computed is None.
+    # profile needs.  A state that could not be sliced is None.
     states: Dict[Analyzer, object] = {
-        a: None if isinstance(s, Exception) else s
-        for a, s in fused_states(df, analyzers)[None].items()
+        a: state_or_none(s) for a, s in fused_states(df, analyzers)[None].items()
     }
 
     def _state_value(analyzer: Analyzer) -> Optional[float]:

@@ -33,7 +33,7 @@ from typing import Callable, Dict, Optional, Sequence
 from pyspark.sql import DataFrame
 
 from .analyzers.base import Analyzer, ScanShareableAnalyzer
-from .analyzers.fused import fused_aggregation, fused_states
+from .analyzers.fused import fused_aggregation, fused_states, state_or_none
 from .analyzers.runner import AnalyzerContext
 from .checks import Check
 from .lineage import _merge, analyzer_key, metrics_from_states
@@ -66,11 +66,12 @@ class StreamingVerification:
 
     # -- state folding -------------------------------------------------------
     def _fold_batch(self, batch_df: DataFrame) -> None:
-        states = fused_states(batch_df, self.analyzers)[None]
+        states = {
+            analyzer_key(a): state_or_none(s)
+            for a, s in fused_states(batch_df, self.analyzers)[None].items()
+        }
         with self._lock:
-            for a, state in states.items():
-                key = analyzer_key(a)
-                state = None if isinstance(state, Exception) else state
+            for key, state in states.items():
                 self._states[key] = _merge(self._states.get(key), state)
             self._batches += 1
 
@@ -148,11 +149,13 @@ class WindowedMetrics:
             if self.slide_duration
             else F.window(self.ts_col, self.window_duration)
         )
-        plan, self._states_of = fused_aggregation(
+        plan, self._states_of, unbuilt = fused_aggregation(
             stream_df.withWatermark(self.ts_col, self.watermark_delay),
             self.analyzers,
             [win.alias("_w")],
         )
+        if unbuilt:  # raise now: a streaming plan is never collected here
+            raise next(iter(unbuilt.values())).error
         return plan
 
     def _upsert_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -164,8 +167,7 @@ class WindowedMetrics:
                 # streaming state store already holds the cumulative
                 # aggregate -> an update REPLACES the window's states
                 self._windows[key] = {
-                    analyzer_key(a): None if isinstance(s, Exception) else s
-                    for a, s in states.items()
+                    analyzer_key(a): state_or_none(s) for a, s in states.items()
                 }
 
     def attach(self, stream_df: DataFrame):

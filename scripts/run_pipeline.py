@@ -39,7 +39,9 @@ def main(argv=None) -> int:
     p.add_argument("--work-dir", required=True,
                    help="checkpoint/state root (local, HDFS or s3a)")
     p.add_argument("--output", help="optional parquet sink for kept docs")
-    p.add_argument("--run-id", default="run")
+    p.add_argument("--run-id", default="run",
+                   help="names the run's state log directory: no path "
+                        "separators, not '.' or '..'")
     p.add_argument("--buckets", type=int, default=64,
                    help="url-hash bucket count (resume + skew granularity)")
     p.add_argument("--no-resume", action="store_true",

@@ -13,7 +13,7 @@ from hooqu_spark.analyzers import (
     Uniqueness,
     do_analysis_run,
 )
-from hooqu_spark.lineage import StateRepository, incremental_metrics
+from hooqu_spark.lineage import StateRecord, StateRepository, incremental_metrics
 from hooqu_spark.sources import ParquetBatchSource, ingest_snapshots
 
 
@@ -155,3 +155,16 @@ def test_frequency_analyzers_are_rejected(spark, tmp_path):
     src = ParquetBatchSource(str(tmp_path / "batches"))
     with pytest.raises(ValueError, match="scan-shareable"):
         ingest_snapshots(spark, src, repo, "run", [Uniqueness(["id"])])
+
+
+def test_clear_deletes_only_its_own_run(tmp_path):
+    repo = StateRepository(str(tmp_path / "states"))
+    record = StateRecord("b0", "Size|*|", "null")
+    for run_id in ("keep", "drop"):
+        repo.save(run_id, [record])
+    for bad in ("", ".", "..", "../states", "keep/.."):
+        with pytest.raises(ValueError, match="plain directory name"):
+            repo.clear(bad)
+    repo.clear("drop")
+    assert repo.load("drop") == []
+    assert repo.load("keep") == [record]

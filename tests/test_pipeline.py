@@ -279,6 +279,27 @@ class TestPipelineEndToEnd:
         assert result.metrics[Size()].value.get() == result.enriched.count()
         assert_gate_equals_scan(result)
 
+    def test_failed_frequency_job_on_resume_commits_nothing(
+        self, spark, pages, tmp_path, monkeypatch
+    ):
+        from hooqu_spark.analyzers.grouping import FrequencyBasedAnalyzer
+        from hooqu_spark.lineage import StateRepository
+
+        work = str(tmp_path / "work")
+        half = pages.where(F.pmod(F.xxhash64("url"), F.lit(8)) < 4)
+        run_pipeline(spark, half, work, run_id="r", n_buckets=8)
+        repo = StateRepository(f"{work}/states")
+        before = repo.load("r")
+        # the url frequency job plans fine and fails while it runs
+        monkeypatch.setattr(
+            FrequencyBasedAnalyzer,
+            "frequency_stats_exprs",
+            staticmethod(lambda: [F.max(F.raise_error(F.lit("frequency job lost")))]),
+        )
+        with pytest.raises(Exception, match="frequency job lost"):
+            run_pipeline(spark, pages, work, run_id="r", n_buckets=8)
+        assert repo.load("r") == before
+
     def test_empty_input_fails_the_gate(self, spark, pages, tmp_path):
         result = run_pipeline(spark, pages.limit(0), str(tmp_path / "work"), n_buckets=8)
         assert result.verification.status == CheckStatus.ERROR
