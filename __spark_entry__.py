@@ -485,10 +485,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return enrich(df).select("doc_id", "lang_pred", "lang_score")
 
     def near_dup_pairs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # LSH-bucketed embedding near-duplicate pairs.  Round 5: the
-        # md5-derived ±1 hyperplanes + fixed-order Catalyst projection
-        # sums (lsh_bucket_expr) make the bucketing bit-replayable in
-        # DuckDB, so this is now fully hash-graded; cosine rounded to
+        # LSH-bucketed embedding near-duplicate pairs.  The md5-derived
+        # ±1 hyperplanes + left-fold projection sums (similarity._lsh_fold)
+        # make the bucketing bit-replayable in DuckDB, so this is
+        # fully hash-graded; cosine rounded to
         # 6 BEFORE thresholding (cross-engine borderline stability,
         # same contract as cosine_pairs_embeddings).
         from hooqu_spark.ops import embedding_near_duplicates
@@ -956,7 +956,7 @@ def oracle_sql() -> dict[str, str]:
     # ±1 planes (hooqu_spark.ops.similarity._projection_planes, 64-dim
     # embeddings, 3 planes, seed 13), each projection an explicitly
     # parenthesized left-associated sum — the exact IEEE-double
-    # addition order lsh_bucket_expr emits, so the bucket signs agree
+    # addition order of similarity._lsh_fold, so the bucket signs agree
     # bit-for-bit (x * ±1.0 is exact).
     from hooqu_spark.ops.similarity import _projection_planes
 

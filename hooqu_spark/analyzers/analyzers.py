@@ -85,6 +85,13 @@ class Size(ScanShareableAnalyzer):
     def state_from_agg(self, values: Sequence) -> Optional[State]:
         return NumMatches(int(values[0] or 0))
 
+    def compute_metric_from(self, state: Optional[State]) -> DoubleMetric:
+        # no state (no rows, e.g. no buckets to merge) is the monoid
+        # identity: an empty input has size 0, not an empty-state failure
+        if state is None:
+            state = NumMatches(0)
+        return super().compute_metric_from(state)
+
 
 class Completeness(ScanShareableAnalyzer):
     """Fraction of non-null (pandas: non-NaN) values in a column.

@@ -18,7 +18,6 @@ from .dedup import (
     dedup_against,
     dedup_by_clusters,
     duplicate_clusters,
-    duplicate_clusters_star,
     exact_dedup,
     lsh_candidate_pairs,
     minhash_dedup,
@@ -76,7 +75,6 @@ from .text import (
 from .multimodal import (
     attach_binary_metadata,
     extract_binary_features,
-    frame_sample_stub,
     resize_images,
 )
 
@@ -86,7 +84,6 @@ __all__ = [
     "bpe_token_count_col",
     "brute_force_topk",
     "extract_binary_features",
-    "frame_sample_stub",
     "resize_images",
     "cap_per_key",
     "cosine_similar_pairs",
@@ -97,7 +94,6 @@ __all__ = [
     "dedup_lines_by_frequency",
     "document_fingerprints",
     "duplicate_clusters",
-    "duplicate_clusters_star",
     "embedding_near_duplicates",
     "exact_dedup",
     "flag_contamination",

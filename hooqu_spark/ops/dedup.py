@@ -354,7 +354,6 @@ def minhash_dedup_clusters(
     n_hashes: int = 64,
     n_bands: int = 16,
     shingle_size: int = 3,
-    algorithm: str = "star",
 ) -> DataFrame:
     """MinHash dedup with the TRANSITIVE survivor policy: connected
     components over the similar-pair graph, one smallest-id survivor
@@ -368,7 +367,7 @@ def minhash_dedup_clusters(
     pairs = minhash_similar_pairs(
         df, id_col, text_col, threshold, n_hashes, n_bands, shingle_size
     )
-    return dedup_by_clusters(df, pairs, id_col, algorithm=algorithm)
+    return dedup_by_clusters(df, pairs, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -479,71 +478,8 @@ def simhash_dedup(
 
 
 # ---------------------------------------------------------------------------
-# n-gram Jaccard (exact verify inside LSH buckets)
+# Connected components (transitive duplicate clusters)
 # ---------------------------------------------------------------------------
-
-def duplicate_clusters(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iterations: int = 25,
-) -> DataFrame:
-    """Transitive duplicate clusters from a pair list: connected
-    components by iterative min-label propagation — every round is one
-    join + one groupBy over the label table, no driver-side graph.
-
-    Returns ``(id, cluster)`` where ``cluster`` is the smallest id in
-    the component.  Pairwise dedup (drop the larger of each pair)
-    under-merges chains A~B~C; this collapses the whole chain to its
-    min id even when A is not directly similar to C.
-
-    Rounds needed = component diameter; near-duplicate clusters are
-    shallow, so this converges in a handful of rounds (early-stops when
-    labels are stable).  For adversarially long chains at 10^12 scale,
-    use :func:`duplicate_clusters_star` — the O(log n) alternating
-    large-star/small-star scheme (Kiveris et al., SoCC'14).
-    """
-    sym = (
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .unionByName(
-            pairs.select(F.col(id_b).alias("u"), F.col(id_a).alias("v"))
-        )
-        .distinct()
-    )
-    labels = (
-        sym.select(F.col("u").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("cluster"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iterations):
-        neighbor_min = (
-            sym.join(labels, sym["v"] == labels["id"])
-            .groupBy(sym["u"].alias("id"))
-            .agg(F.min("cluster").alias("n_min"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("cluster"), F.coalesce("n_min", F.col("cluster"))
-                ).alias("cluster"),
-            )
-        )
-        stable = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .where(F.col("n.cluster") != F.col("o.cluster"))
-            .isEmpty()
-        )
-        # truncate lineage each round or the plan grows exponentially
-        labels = new_labels.localCheckpoint()
-        if stable:
-            break
-    return labels
-
 
 def _cc_min_neighbor(sym: DataFrame) -> DataFrame:
     """m(u) = min(N(u) ∪ {u}) over a symmetric edge table (u, v)."""
@@ -552,18 +488,21 @@ def _cc_min_neighbor(sym: DataFrame) -> DataFrame:
     )
 
 
-def duplicate_clusters_star(
+def duplicate_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iterations: int = 40,
 ) -> DataFrame:
-    """Connected components by the alternating large-star / small-star
-    algorithm (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — converges in O(log n) rounds vs the label
-    propagation's O(diameter), so adversarially long duplicate chains
-    (quote-of-a-quote-of-a-quote pages) collapse in a handful of
-    rounds.
+    """Transitive duplicate clusters from a pair list: connected
+    components by the alternating large-star / small-star algorithm
+    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    SoCC'14), with no driver-side graph.  Pairwise dedup (drop the
+    larger of each pair) under-merges chains A~B~C; this collapses the
+    whole chain even when A is not directly similar to C.  It converges
+    in O(log n) rounds, where min-label propagation needs O(diameter),
+    so adversarially long duplicate chains (quote-of-a-quote-of-a-quote
+    pages) collapse in a handful of rounds.
 
     Each round is two join+groupBy passes over the EDGE table:
 
@@ -574,9 +513,8 @@ def duplicate_clusters_star(
 
     Edges only ever point "downhill" toward component minima; at
     convergence the edge set is a star per component.  Returns
-    ``(id, cluster)`` like :func:`duplicate_clusters` (cluster = the
-    component's smallest id; isolated nodes never appear in ``pairs``
-    and are absent, also like it).
+    ``(id, cluster)`` where ``cluster`` is the component's smallest id;
+    isolated nodes never appear in ``pairs`` and are absent.
     """
     edges = (
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
@@ -640,24 +578,11 @@ def dedup_by_clusters(
     id_col: str,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    algorithm: str = "star",
 ) -> DataFrame:
     """Keep one representative (smallest id) per transitive duplicate
-    cluster; rows not in any pair survive untouched.
-
-    ``algorithm="star"`` (default) finds components with the O(log n)
-    alternating large-star/small-star scheme — round count independent
-    of chain length, the right default at 10^12 docs where adversarial
-    quote-chains make O(diameter) label propagation unbounded.
-    ``algorithm="label"`` keeps the propagation variant (fewer jobs per
-    round; fine when clusters are known-shallow).  Both produce the
-    identical cluster labeling (parity-tested on random graphs)."""
-    if algorithm == "star":
-        clusters = duplicate_clusters_star(pairs, id_a, id_b)
-    elif algorithm == "label":
-        clusters = duplicate_clusters(pairs, id_a, id_b)
-    else:
-        raise ValueError(f"unknown clustering algorithm: {algorithm!r}")
+    cluster (:func:`duplicate_clusters`); rows not in any pair survive
+    untouched."""
+    clusters = duplicate_clusters(pairs, id_a, id_b)
     losers = clusters.where(F.col("id") != F.col("cluster")).select(
         F.col("id").alias(id_col)
     )

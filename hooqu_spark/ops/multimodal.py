@@ -8,9 +8,9 @@ control, UDF signatures) is real and tested.  Decoding is pluggable:
 in this sandbox (no media libraries) it falls back to
 :class:`FakeImageDecoder`, the ``DETERMINISTIC_FAKE_DECODE`` stand-in
 that derives stable pseudo-metadata from the payload bytes so the
-plumbing is exercised end-to-end.  Audio/video feature extraction and
-frame sampling remain stubbed the same way (swap in torchaudio / pyav
-with identical signatures).
+plumbing is exercised end-to-end.  Audio/video feature extraction
+remains stubbed the same way (swap in torchaudio with an identical
+signature).
 """
 
 from __future__ import annotations
@@ -242,34 +242,3 @@ def extract_binary_features(
 
     return df.mapInPandas(gen, schema=out_schema)
 
-
-def frame_sample_stub(
-    df: DataFrame, binary_col: str = "html", every_n: int = 10
-) -> DataFrame:
-    """Video frame-sampling plumbing: one row per sampled frame index.
-
-    STUB decode — frame count derives from payload length; production
-    swaps in pyav keyframe iteration with the identical output schema
-    ``(… , frame_idx int, frame binary)``."""
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("frame", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                payload = row[binary_col]
-                n_frames = 0 if payload is None else max(1, len(payload) // 1000)
-                for idx in range(0, n_frames, every_n):
-                    d = row.to_dict()
-                    d["frame_idx"] = idx
-                    d["frame"] = bytes(payload)[idx : idx + 16]
-                    rows.append(d)
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
-
-    return df.mapInPandas(gen, schema=out_schema)

@@ -110,43 +110,30 @@ def _projection_planes(dim: int, n_planes: int, seed: int = 13) -> np.ndarray:
     return out
 
 
-def lsh_bucket_expr(
-    vec_col: str, dim: int, n_planes: int, seed: int = 13
-) -> F.Column:
-    """Pure-Catalyst sign-LSH bucket id: for each ±1 hyperplane the
-    projection is an EXPLICIT left-associated sum
-    ``((e[1]*p1 + e[2]*p2) + e[3]*p3) + …`` — a fixed IEEE-double
-    addition order any engine reproduces exactly (``x * ±1.0`` is
-    exact), so the bucket assignment is bit-for-bit replayable in the
-    DuckDB oracle.  Stays inside whole-stage codegen: no Python, no
-    Arrow transfer, unlike :func:`lsh_bucket_udf`."""
-    planes = _projection_planes(dim, n_planes, seed)
-    total = None
-    for j in range(n_planes):
-        dot = None
-        for i in range(dim):
-            term = F.element_at(F.col(vec_col), i + 1) * F.lit(
-                float(planes[i, j])
-            )
-            dot = term if dot is None else dot + term
-        bit = F.when(dot > 0, F.lit(1 << j).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        total = bit if total is None else total + bit
-    return total
+def _lsh_fold(mat: np.ndarray, planes: np.ndarray):
+    """``(codes, projections)`` of the rows of ``mat`` (batch, dim).
+    Each projection is a left fold over the components,
+    ``((e[1]*p1 + e[2]*p2) + e[3]*p3) + …`` — the addition order the
+    DuckDB oracle replays, bit for bit, at any width (``x * ±1.0`` is
+    exact and ``0.0 + x == x``; a BLAS matmul sums in an unspecified
+    order).  Bit j of a code is set iff projection j is > 0, so a NaN
+    row (NULL vector) or a NaN element leaves its bits unset, as a
+    NULL does in SQL."""
+    acc = np.zeros((mat.shape[0], planes.shape[1]))
+    for i in range(planes.shape[0]):
+        acc += mat[:, i : i + 1] * planes[i]
+    weights = 1 << np.arange(planes.shape[1], dtype=np.int64)
+    return ((acc > 0) * weights).sum(axis=1), acc
 
 
-def lsh_bucket_udf(dim: int, n_planes: int, seed: int = 13):
+def _lsh_bucket_udf(planes: np.ndarray):
+    """Arrow-batched sign-LSH bucket id over an embedding column."""
     from pyspark.sql.functions import pandas_udf
-
-    planes = _projection_planes(dim, n_planes, seed)
-    weights = 1 << np.arange(n_planes, dtype=np.int64)
 
     @pandas_udf("long")
     def bucket(col: pd.Series) -> pd.Series:
-        mat = _vec_matrix(col, dim)
-        signs = (mat @ planes) > 0  # NaN rows -> all-False -> bucket 0
-        return pd.Series((signs * weights).sum(axis=1).astype(np.int64))
+        codes, _ = _lsh_fold(_vec_matrix(col, planes.shape[0]), planes)
+        return pd.Series(codes)
 
     return bucket
 
@@ -161,10 +148,11 @@ def _multiprobe_buckets(
     import heapq
     import itertools
 
-    proj = q @ planes
+    # the bucketer's own fold: a query equal to a row shares its bucket
+    codes, proj = _lsh_fold(q[None, :], planes)
+    base, proj = int(codes[0]), proj[0]
     n_planes = planes.shape[1]
     weights = 1 << np.arange(n_planes, dtype=np.int64)
-    base = int(((proj > 0) * weights).sum())
     if n_probes <= 1:
         return [base]
     margins = np.abs(proj)
@@ -219,9 +207,7 @@ def lsh_bucketed_topk(
     planes = _projection_planes(len(q), n_planes, seed)
     probes = _multiprobe_buckets(q, planes, n_probes)
 
-    bucketed = df.withColumn(
-        "_bucket", lsh_bucket_udf(len(q), n_planes, seed)(F.col(vec_col))
-    )
+    bucketed = df.withColumn("_bucket", _lsh_bucket_udf(planes)(F.col(vec_col)))
     probe = bucketed.where(F.col("_bucket").isin(probes))
     return brute_force_topk(probe, query_vec, k, vec_col, id_col)
 
@@ -536,13 +522,10 @@ def embedding_near_duplicates(
     cosine is verified only within buckets (JVM-side arithmetic on the
     normalized vectors via zip_with/aggregate).
 
-    Bucketing uses the md5-derived ±1 planes via
-    :func:`lsh_bucket_expr` — pure Catalyst with a fixed addition
-    order, so the whole operator (buckets AND verify) is replayable by
-    the DuckDB oracle.  Very wide codegen (dim*n_planes > 8192 terms)
-    falls back to the Arrow UDF bucketer, which computes the same
-    planes with numpy's summation order (sign differences possible
-    only at |projection| ~ 1e-15).  ``round_to`` rounds the cosine
+    Bucketing projects onto the md5-derived ±1 planes with
+    :func:`_lsh_fold`'s fixed left-to-right addition order, so the whole
+    operator (buckets AND verify) is replayable by the DuckDB oracle
+    at any embedding width.  ``round_to`` rounds the cosine
     BEFORE thresholding (cross-engine borderline stability — the
     driver contract uses 6), same contract as
     :func:`cosine_similar_pairs`."""
@@ -552,11 +535,10 @@ def embedding_near_duplicates(
         return df.sparkSession.createDataFrame(
             [], f"id_a {id_t}, id_b {id_t}, cosine double"
         )
-    dim = len(probe[0])
-    if dim * n_planes <= 8192:
-        bucket = lsh_bucket_expr(vec_col, dim, n_planes, seed)
-    else:
-        bucket = lsh_bucket_udf(dim, n_planes, seed)(F.col(vec_col))
+    planes = _projection_planes(len(probe[0]), n_planes, seed)
+    # the UDF never returns NULL; saying so keeps the join from
+    # inferring an isnotnull(_bucket) filter that runs the UDF twice
+    bucket = F.coalesce(_lsh_bucket_udf(planes)(F.col(vec_col)), F.lit(0))
     bucketed = df.withColumn("_bucket", bucket).select(
         id_col, vec_col, "_bucket"
     )
@@ -815,8 +797,8 @@ def semantic_dedup(
         from .dedup import dedup_by_clusters
 
         return dedup_by_clusters(df, pairs, id_col)
-    from .dedup import duplicate_clusters_star
-    comps = duplicate_clusters_star(pairs)  # (id, cluster-min id)
+    from .dedup import duplicate_clusters
+    comps = duplicate_clusters(pairs)  # (id, cluster-min id)
     sims = df.select(
         F.col(id_col).alias("id"),
         ivf_assign_sim_udf(centroids)(F.col(vec_col))["sim"].alias("_sim"),

@@ -125,6 +125,8 @@ def sample_to_token_budget(
     from pyspark.sql import Window
     from itertools import chain
 
+    if not budgets:  # every language is unbudgeted (an empty map has no key type)
+        return df.where(F.lit(False))
     key = (
         F.xxhash64(F.col(id_col)) if order_by == "hash" else F.col(id_col)
     )
@@ -197,7 +199,11 @@ def mix_to_token_budget(
     z = float(sum(weights.values()))
     if not z > 0:
         raise ValueError(f"weights must sum to > 0, got {weights!r}")
-    budgets = {k: int(total_tokens * v / z) for k, v in weights.items()}
+    # a stratum whose budget truncates to 0 is dropped like an
+    # unbudgeted one: its zero-token docs would pass cum(0) <= 0
+    budgets = {
+        k: b for k, v in weights.items() if (b := int(total_tokens * v / z)) > 0
+    }
     return sample_to_token_budget(
         df, budgets, n_tokens_col, strata_col, id_col, order_by
     )

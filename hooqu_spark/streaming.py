@@ -303,6 +303,7 @@ def streaming_grouped_metrics(
         acc = (
             StandardDeviationState(*state.get) if state.exists else None
         )
+        updated = False
         for pdf in pdfs:
             vals = pd.to_numeric(pdf[value_col], errors="coerce").dropna()
             if not len(vals):
@@ -311,11 +312,15 @@ def streaming_grouped_metrics(
             bm2 = float(((vals - bavg) ** 2).sum())
             part = StandardDeviationState(float(len(vals)), bavg, bm2)
             acc = part if acc is None else acc.sum(part)
-        if acc is None:  # nothing numeric arrived for this key
+            updated = True
+        if acc is None:  # this key has seen nothing numeric yet
+            return
+        if idle_timeout_ms is not None:
+            # every call must set it: a call that does not clears it
+            state.setTimeoutDuration(idle_timeout_ms)
+        if not updated:  # only NULL/non-numeric values: nothing new
             return
         state.update((acc.n, acc.avg, acc.m2))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
         yield pd.DataFrame(
             [
                 {

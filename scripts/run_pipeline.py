@@ -87,9 +87,8 @@ def main(argv=None) -> int:
         result.kept.write.mode("overwrite").parquet(args.output)
 
     # counts from the merged lineage states: no scan of the checkpoint
-    size = result.metrics[Size()].value
+    n_total = int(result.metrics[Size()].value.get())
     keep_rate = result.metrics[Compliance("keep_rate", "keep == true")].value
-    n_total = int(size.get()) if size.isSuccess else 0
     # keep_rate is kept/total as a double, so this rounds back exactly
     n_kept = round(keep_rate.get() * n_total) if n_total else 0
     summary = {

@@ -22,7 +22,6 @@ from hooqu_spark.ops import (
 from hooqu_spark.ops.multimodal import (
     attach_binary_metadata,
     extract_binary_features,
-    frame_sample_stub,
 )
 
 
@@ -366,41 +365,85 @@ class TestSimilarity:
         assert len(got & want) >= 3
 
 
+def _left_fold_bucket(vec, planes):
+    """Pure-Python sign-LSH bucket: each projection summed left to
+    right from the first component, as the DuckDB oracle does; a NULL
+    vector or element leaves the bit unset (SQL NULL > 0 is not true)."""
+    if vec is None or None in vec:
+        return 0
+    code = 0
+    for j in range(len(planes[0])):
+        acc = vec[0] * planes[0][j]
+        for i in range(1, len(vec)):
+            acc = acc + vec[i] * planes[i][j]
+        if acc > 0:
+            code |= 1 << j
+    return code
+
+
+class TestSignLshBucketer:
+    @pytest.mark.parametrize("dim", [3, 64, 384, 1024])
+    def test_udf_matches_python_left_fold(self, spark, dim):
+        from hooqu_spark.ops.similarity import _lsh_bucket_udf, _projection_planes
+
+        planes = _projection_planes(dim, 10)
+        rng = np.random.RandomState(dim)
+        vecs = [rng.standard_normal(dim).tolist() for _ in range(8)]
+        # multiples of 0.1 cancel: projections land within rounding
+        # noise of 0, where the addition order decides the sign
+        vecs += [np.round(rng.uniform(-1, 1, dim), 1).tolist() for _ in range(24)]
+        null_elem = rng.standard_normal(dim).tolist()
+        null_elem[dim // 2] = None
+        vecs += [[0.0] * dim, None, null_elem]
+        df = spark.createDataFrame(
+            list(enumerate(vecs)), "vec_id long, embedding array<double>"
+        )
+        got = {
+            r["vec_id"]: r["b"]
+            for r in df.select(
+                "vec_id", _lsh_bucket_udf(planes)("embedding").alias("b")
+            ).collect()
+        }
+        pl = planes.tolist()
+        assert got == {i: _left_fold_bucket(v, pl) for i, v in enumerate(vecs)}
+        assert got[len(vecs) - 3] == got[len(vecs) - 2] == 0  # zero, NULL
+
+    @pytest.mark.parametrize("dim,n_planes", [(384, 10), (768, 10), (1024, 8)])
+    def test_near_duplicates_at_embedding_widths(self, spark, dim, n_planes):
+        rng = np.random.RandomState(1)
+        mat = rng.standard_normal((24, dim))
+        mat[7] = mat[3] * 1.001 + 0.0001  # near duplicate of row 3
+        df = spark.createDataFrame(
+            [(i, mat[i].tolist()) for i in range(24)],
+            "vec_id long, embedding array<double>",
+        )
+        pairs = embedding_near_duplicates(
+            df, threshold=0.999, n_planes=n_planes
+        ).collect()
+        assert {(r["id_a"], r["id_b"]) for r in pairs} == {(3, 7)}
+
+    def test_query_equal_to_a_row_shares_its_bucket(self, spark):
+        from hooqu_spark.ops.similarity import _lsh_fold, _projection_planes
+
+        dim, n_planes = 384, 8
+        rng = np.random.RandomState(5)
+        mat = np.round(rng.uniform(-1, 1, (200, dim)), 1)
+        planes = _projection_planes(dim, n_planes)
+        codes, _ = _lsh_fold(mat, planes)
+        blas = (((mat @ planes) > 0) * (1 << np.arange(n_planes))).sum(axis=1)
+        # prefer a row whose BLAS bucket differs from the fold's
+        row = int(np.flatnonzero(codes != blas)[0]) if (codes != blas).any() else 0
+        df = spark.createDataFrame(
+            [(i, mat[i].tolist()) for i in range(len(mat))],
+            "vec_id long, embedding array<double>",
+        )
+        got = lsh_bucketed_topk(
+            df, mat[row].tolist(), k=1, n_planes=n_planes
+        ).collect()
+        assert [r["vec_id"] for r in got] == [row]
+
+
 class TestDuplicateClustersAdversarial:
-    def test_long_chain_converges_within_iteration_budget(self, spark):
-        # path graph 0-1-2-...-39: diameter 39; min-label propagation
-        # moves the 0 label ONE hop per round, so convergence needs 39
-        # rounds — within an explicit budget of 50
-        from hooqu_spark.ops import duplicate_clusters
-
-        pairs = spark.createDataFrame(
-            [(i, i + 1) for i in range(39)], "id_a long, id_b long"
-        )
-        labels = {
-            r["id"]: r["cluster"]
-            for r in duplicate_clusters(pairs, max_iterations=50).collect()
-        }
-        assert set(labels.values()) == {0}
-        assert len(labels) == 40
-
-    def test_max_iterations_caps_propagation(self, spark):
-        # the documented limitation: a chain longer than max_iterations
-        # is NOT fully collapsed (the large-star/small-star scheme is
-        # the O(log n) switch for adversarial chains at scale)
-        from hooqu_spark.ops import duplicate_clusters
-
-        pairs = spark.createDataFrame(
-            [(i, i + 1) for i in range(39)], "id_a long, id_b long"
-        )
-        labels = {
-            r["id"]: r["cluster"]
-            for r in duplicate_clusters(pairs, max_iterations=5).collect()
-        }
-        assert labels[5] == 0       # within 5 hops: collapsed
-        assert labels[39] != 0      # beyond the budget: still separate
-        # labels are monotone non-increasing toward the chain head
-        assert all(labels[i] <= i for i in labels)
-
     def test_bridged_clusters_merge(self, spark):
         from hooqu_spark.ops import dedup_by_clusters, duplicate_clusters
 
@@ -573,14 +616,6 @@ class TestMultimodal:
         assert len(a[0]) == 16
         assert abs(sum(a[0]) - 1.0) < 1e-5
 
-    def test_frame_sampling(self, media):
-        frames = frame_sample_stub(media, every_n=2).collect()
-        by_id = {}
-        for r in frames:
-            by_id.setdefault(r["id"], []).append(r["frame_idx"])
-        assert len(by_id[0]) == 3  # 5 pseudo-frames sampled every 2 -> 0,2,4
-        assert 3 not in by_id  # null payload -> no frames
-
     def test_resize_deterministic_fake(self, media):
         from hooqu_spark.ops.multimodal import FakeImageResizer, resize_images
 
@@ -700,7 +735,7 @@ class TestStarConnectedComponents:
     def test_matches_union_find_on_random_graphs(self, spark):
         import random
 
-        from hooqu_spark.ops import duplicate_clusters_star
+        from hooqu_spark.ops import duplicate_clusters
 
         for seed in range(6):
             rng = random.Random(seed)
@@ -717,38 +752,24 @@ class TestStarConnectedComponents:
             pairs = spark.createDataFrame(edges, "id_a long, id_b long")
             got = {
                 r["id"]: r["cluster"]
-                for r in duplicate_clusters_star(pairs).collect()
+                for r in duplicate_clusters(pairs).collect()
             }
             assert got == want, (seed, sorted(edges))
 
     def test_long_chain_converges_in_log_rounds(self, spark):
         # a 200-node path needs ~200 label-propagation rounds but only
         # O(log n) star rounds — 12 iterations must fully collapse it
-        from hooqu_spark.ops import duplicate_clusters_star
+        from hooqu_spark.ops import duplicate_clusters
 
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(199)], "id_a long, id_b long"
         )
         labels = {
             r["id"]: r["cluster"]
-            for r in duplicate_clusters_star(pairs, max_iterations=12).collect()
+            for r in duplicate_clusters(pairs, max_iterations=12).collect()
         }
         assert len(labels) == 200
         assert set(labels.values()) == {0}
-
-    def test_agrees_with_label_propagation(self, spark):
-        from hooqu_spark.ops import duplicate_clusters, duplicate_clusters_star
-
-        edges = [(0, 1), (1, 2), (5, 6), (6, 7), (7, 5), (9, 3)]
-        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        a = {
-            r["id"]: r["cluster"] for r in duplicate_clusters(pairs).collect()
-        }
-        b = {
-            r["id"]: r["cluster"]
-            for r in duplicate_clusters_star(pairs).collect()
-        }
-        assert a == b
 
 
 class TestIvfIndex:

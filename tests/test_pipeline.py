@@ -301,6 +301,8 @@ class TestPipelineEndToEnd:
         assert repo.load("r") == before
 
     def test_empty_input_fails_the_gate(self, spark, pages, tmp_path):
+        from hooqu_spark.analyzers import Size
+
         result = run_pipeline(spark, pages.limit(0), str(tmp_path / "work"), n_buckets=8)
         assert result.verification.status == CheckStatus.ERROR
         integrity = next(
@@ -308,6 +310,9 @@ class TestPipelineEndToEnd:
             if c.description == "input integrity"
         )
         assert integrity.constraint_results[0].status.name == "FAILURE"  # has_size
+        # no buckets merge to the Size monoid's identity: 0, not a failure
+        size = result.metrics[Size()].value
+        assert size.isSuccess and size.get() == 0
         assert result.processed_buckets == []
         assert result.kept.count() == 0
 

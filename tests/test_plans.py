@@ -172,6 +172,19 @@ class TestNoCartesianProducts:
         p = plan_str(embedding_near_duplicates(vecs, threshold=0.9, n_planes=2))
         assert "CartesianProduct" not in p
 
+    def test_near_duplicates_bucket_udf_runs_once(self, spark):
+        # the bucket UDF feeds both join sides through one reused
+        # exchange; an inferred isnotnull(_bucket) filter would run it
+        # a second time below the projection
+        from hooqu_spark.ops import embedding_near_duplicates
+
+        vecs = spark.createDataFrame(
+            [(i, [float(i), 1.0]) for i in range(10)],
+            "vec_id long, embedding array<double>",
+        )
+        p = plan_str(embedding_near_duplicates(vecs, threshold=0.9, n_planes=2))
+        assert p.count("ArrowEvalPython") == 1
+
     def test_semantic_pair_join_is_cluster_keyed(self, spark):
         from hooqu_spark.ops import semantic_duplicate_pairs
 

@@ -348,6 +348,25 @@ class TestWeightedMixing:
         }
         assert by_src == {"web": 1500, "code": 500}
 
+    def test_zero_budget_stratum_keeps_nothing(self, spark):
+        from hooqu_spark.ops import mix_to_token_budget
+
+        # zero-token docs in every stratum: cum(0) <= 0 would keep them
+        # against a budget of 0
+        rows = [(i, "web", 0 if i < 2 else 10) for i in range(5)]
+        rows += [(100 + i, "code", 0) for i in range(3)]
+        df = spark.createDataFrame(
+            rows, "doc_id long, source string, n_tokens long"
+        )
+
+        def kept(weights, total):
+            out = mix_to_token_budget(df, weights, total, order_by="id")
+            return {r["source"] for r in out.collect()}
+
+        assert kept({"web": 1, "code": 0}, 100) == {"web"}  # 0 weight
+        assert kept({"web": 1000, "code": 1}, 100) == {"web"}  # truncated to 0
+        assert kept({"web": 1, "code": 1}, 1) == set()  # every budget is 0
+
     def test_degenerate_inputs_raise(self, spark):
         from hooqu_spark.ops import mix_to_token_budget
 

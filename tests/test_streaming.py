@@ -477,6 +477,63 @@ class TestStreamingGroupedMetrics:
         (row,) = emitted
         assert (row["n"], row["mean"], row["stddev"]) == (1, 1.0, 0.0)
 
+    def test_null_only_batch_emits_nothing_and_keeps_timeout(self, spark, tmp_path):
+        """A key with state that gets only NULLs in a batch emits
+        nothing for that batch, and the call still sets its idle
+        timeout: the key is evicted after a later quiet batch, so its
+        next arrival restarts from zero."""
+        from hooqu_spark.streaming import streaming_grouped_metrics
+
+        src = str(tmp_path / "gm_nullbatch_src")
+        ckpt = str(tmp_path / "gm_nullbatch_ckpt")
+        schema = "k string, v double"
+        # one file per micro-batch: 'a' gets a value, then only a NULL,
+        # then idles one batch (evicted at 1ms idle), then reappears
+        batches = [
+            [("a", 1.0)],
+            [("a", None), ("b", 2.0)],
+            [("b", 3.0)],
+            [("a", 5.0)],
+        ]
+        for rows in batches:
+            spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+                "append"
+            ).parquet(src)
+
+        emitted = []
+
+        def sink(bdf, bid):
+            emitted.append((bid, bdf.collect()))
+
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = (
+            streaming_grouped_metrics(stream, "k", "v", idle_timeout_ms=1)
+            .writeStream.outputMode("update")
+            .foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        deadline = time.time() + 90
+
+        def keys_by_batch():
+            return [{r["k"] for r in rows} for _, rows in sorted(emitted)]
+
+        while time.time() < deadline and len([b for b in keys_by_batch() if b]) < 4:
+            time.sleep(0.5)
+        q.stop()
+        q.awaitTermination(30)
+
+        by_batch = [b for b in keys_by_batch() if b]
+        assert by_batch == [{"a"}, {"b"}, {"b"}, {"a"}]
+        a_rows = [r for _, rows in sorted(emitted) for r in rows if r["k"] == "a"]
+        # the second 'a' restarted from a fresh state: it was evicted
+        assert [(r["n"], r["mean"]) for r in a_rows] == [(1, 1.0), (1, 5.0)]
+
     def test_idle_timeout_evicts_state(self, spark, tmp_path):
         """With a processing-time idle timeout, a key that stays quiet
         for a batch is evicted and a later arrival restarts from zero —
