@@ -20,8 +20,8 @@ signature but stubbed (``aggregate_with``/``save_states_with`` hooks,
   ``pmod(xxhash64(url), n)`` for ``is_unique("url")``), so no group
   spans two buckets.
 * ``StateRepository`` — parquet-backed commit log of (run_id, bucket,
-  analyzer_key, state_json).  A killed run resumes by processing only
-  buckets absent from the committed log.
+  analyzer_key, state_json, attempt).  A killed run resumes by
+  processing only buckets absent from the committed log.
 
 The bucket count, not the data size, bounds driver memory: 100TB with
 10k buckets collects 10k small rows.
@@ -33,7 +33,7 @@ import json
 import os
 import shutil
 import uuid
-from dataclasses import dataclass
+from dataclasses import astuple, dataclass
 from typing import Dict, List, Optional, Sequence
 
 import pandas as pd
@@ -59,6 +59,11 @@ class StateRecord:
     bucket: str
     analyzer_key: str
     state_json: str  # JSON dict of the state, or "null"
+    # the checkpoint attempt that holds the bucket's rows ("" if none)
+    attempt: str = ""
+
+
+_RECORD_COLUMNS = ["bucket", "analyzer_key", "state_json", "attempt"]
 
 
 def compute_partition_states(
@@ -126,10 +131,13 @@ class StateRepository:
     """Parquet-backed commit log for per-bucket analyzer states.
 
     Layout: ``<root>/<run_id>/states_<uuid>.parquet`` with columns
-    (bucket, analyzer_key, state_json).  ``save`` is the commit point:
-    a bucket is "done" once its states are persisted here, so a
-    restarted run recomputes only missing buckets (processing must be
-    idempotent per bucket, e.g. dynamic partition overwrite).
+    (bucket, analyzer_key, state_json, attempt).  ``save`` is the commit
+    point: a bucket is "done" once its states are persisted here, so a
+    restarted run recomputes only missing buckets.  ``attempt`` names
+    where the bucket's rows are (``run_pipeline``'s checkpoint
+    directory ``attempt=<id>``), so rows a crashed attempt wrote but
+    never committed are ignored, not overwritten.  A file written
+    before the column existed loads with ``attempt == ""``.
     """
 
     def __init__(self, root: str):
@@ -148,8 +156,8 @@ class StateRepository:
         d = self._run_dir(run_id)
         os.makedirs(d, exist_ok=True)
         pdf = pd.DataFrame(
-            [(r.bucket, r.analyzer_key, r.state_json) for r in records],
-            columns=["bucket", "analyzer_key", "state_json"],
+            [astuple(r) for r in records],
+            columns=_RECORD_COLUMNS,
         )
         tmp = os.path.join(d, f".tmp_{uuid.uuid4().hex}.parquet")
         final = os.path.join(d, f"states_{uuid.uuid4().hex}.parquet")
@@ -167,7 +175,7 @@ class StateRepository:
         if not os.path.isdir(d):
             return []
         return [
-            StateRecord(row.bucket, row.analyzer_key, row.state_json)
+            StateRecord(*row)
             for f in sorted(os.listdir(d))
             if f.startswith("states_") and f.endswith(".parquet")
             for row in pd.read_parquet(os.path.join(d, f)).itertuples(index=False)

@@ -705,10 +705,11 @@ def semantic_duplicate_pairs(
                 df, vec_col, id_col, n_clusters, sample_size, n_iters,
                 seed, distributed_training,
             )
+        # the UDF never returns NULL; saying so keeps the join from
+        # inferring an isnotnull(_la) filter that runs the UDF twice
+        cluster = F.coalesce(ivf_assign_udf(centroids)(F.col(vec_col)), F.lit(-1))
         assigned = df.select(
-            F.col(id_col),
-            F.col(vec_col),
-            ivf_assign_udf(centroids)(F.col(vec_col)).alias("_sem_list"),
+            F.col(id_col), F.col(vec_col), cluster.alias("_sem_list")
         )
     l = assigned.select(
         F.col(id_col).alias("id_a"),

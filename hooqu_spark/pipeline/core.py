@@ -13,10 +13,13 @@ Execution design (Spark-first, 100TB-minded):
 * **bucketing** — ``pmod(xxhash64(url), n_buckets)`` spreads hot hosts
   uniformly (hash-salting the skewed host key); the bucket is the
   checkpoint/resume unit and the lineage partition key.
-* **checkpoint** — the enriched table is written once, partitioned by
-  bucket with dynamic partition overwrite (idempotent re-runs); the
-  per-bucket analyzer states committed to the ``StateRepository`` are
-  the "done" marker.  A killed run resumes by processing only
+* **checkpoint** — each run (attempt) writes its new buckets once,
+  unpartitioned, to its own ``attempt=<id>`` directory with ``bucket``
+  as an ordinary column: one file per write task, not one per task
+  and bucket.  The per-bucket analyzer states committed to the
+  ``StateRepository`` are the "done" marker and name the attempt that
+  holds each bucket; the checkpoint is the union of the committed
+  ``(attempt, bucket)`` pairs.  A killed run resumes by processing only
   uncommitted buckets.
 * **metrics** — per-bucket monoid states (lineage) merge to global
   metrics.  The gating Checks are evaluated from the same merged
@@ -28,7 +31,10 @@ Execution design (Spark-first, 100TB-minded):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import re
+import uuid
+from dataclasses import dataclass, replace
+from functools import reduce
 from typing import Dict, Iterator, List, Optional, Sequence
 
 import pandas as pd
@@ -208,13 +214,19 @@ def run_pipeline(
 ) -> PipelineResult:
     """End-to-end gated pipeline with checkpoint/resume.
 
-    Commit protocol: (1) enriched bucket partitions written with
-    dynamic partition overwrite (idempotent), (2) bucket states
-    committed to the StateRepository (the durable "done" marker).
-    Crash between (1) and (2) -> bucket is reprocessed and its
-    partition overwritten; no duplicates, no loss.  ``resume=False``
-    first deletes the run's committed states, so every checkpointed
-    bucket is recomputed and merged once.
+    Commit protocol: (1) the uncommitted buckets are enriched and
+    written to a new directory ``enriched/<run_id>/attempt=<id>``,
+    (2) their states, each naming that attempt, are committed to the
+    StateRepository (the durable "done" marker).  The checkpoint is
+    the union, over the attempts the log names, of each attempt's
+    committed buckets.  A crash between (1) and (2) leaves an attempt
+    no record names: the next run ignores its rows, deletes it, and
+    reprocesses its buckets; no duplicates, no loss.  One writer per
+    ``run_id``.  ``resume=False`` first deletes the run's committed
+    states and then every attempt, so every bucket is recomputed and
+    merged once.  A log written by the older bucket-directory layout
+    (records without an attempt) raises ``ValueError``: rerun with
+    ``resume=False``.
     """
     repo = StateRepository(f"{work_dir}/states")
     enriched_dir = f"{work_dir}/enriched/{run_id}"
@@ -223,48 +235,77 @@ def run_pipeline(
     # one per-bucket states job serves the lineage metrics and the gate
     analyzers = list(dict.fromkeys([*lineage_analyzers(rules), *gate]))
 
+    # deletes go through the filesystem the checkpoint write uses
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    root = Path(enriched_dir)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
     if not resume:
         # a fresh log: records beside the old ones would double-count
         # on a later resume
         repo.clear(run_id)
+        fs.delete(root, True)
     prior = repo.load(run_id)
+    if any(not r.attempt for r in prior):
+        raise ValueError(
+            f"the state log of run {run_id!r} was written by the "
+            "bucket-directory checkpoint layout; rerun with resume=False "
+            "(--no-resume)"
+        )
     committed = sorted({r.bucket for r in prior})
+    # crash leftovers and attempts that had nothing to write; listed,
+    # not globbed, since run_id and work_dir may hold glob characters
+    named = {f"attempt={r.attempt}" for r in prior}
+    for status in fs.listStatus(root) if fs.exists(root) else []:
+        name = status.getPath().getName()
+        if name.startswith("attempt=") and name not in named:
+            fs.delete(status.getPath(), True)
 
     bucketed = pages.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("string")
+        "bucket", F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
     )
     todo = bucketed
     if committed:
-        todo = bucketed.where(~F.col("bucket").isin(committed))
+        todo = bucketed.where(~F.col("bucket").cast("string").isin(committed))
 
     # Drop the fat binary column BEFORE the Arrow UDF stage: Catalyst
     # does not prune columns through the Python eval node, so anything
     # still in the plan is decoded and carried (2.4x slower measured
-    # with html kept).  An empty ``todo`` writes no partition.
+    # with html kept).
     enriched_new = apply_rules(enrich(todo.drop("html")), rules)
-    (
-        enriched_new.write.partitionBy("bucket")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(enriched_dir)
+    enriched_new = enriched_new.select(
+        *[c for c in enriched_new.columns if c != "bucket"], "bucket"
     )
-    # The write plan's schema, as partition discovery would infer it
-    # (bucket last, as an int), so the read starts no inference job.
-    schema = T.StructType(
-        [T.StructField(f.name, f.dataType) for f in enriched_new.schema.fields
-         if f.name != "bucket"]
-        + [T.StructField("bucket", T.IntegerType())]
-    )
-    checkpoint = spark.read.schema(schema).parquet(enriched_dir)
+    attempt = uuid.uuid4().hex
+    enriched_new.write.mode("error").parquet(f"{enriched_dir}/attempt={attempt}")
 
-    # Buckets in the checkpoint but not in the log: this run's, plus
-    # any a crashed run wrote but never committed.
-    fresh = checkpoint
-    if committed:
-        fresh = checkpoint.where(~F.col("bucket").cast("string").isin(committed))
-    records = compute_partition_states(fresh, analyzers, "bucket")
+    # Explicit paths read with the write plan's schema start no
+    # inference and no listing job.
+    schema = enriched_new.schema
+
+    def read_attempt(a: str) -> DataFrame:
+        # Spark globs a read path: escape the glob characters a run_id
+        # or work_dir may hold, so the path names only this attempt
+        path = re.sub(r"([\\{}\[\]*?])", r"\\\1", f"{enriched_dir}/attempt={a}")
+        return spark.read.schema(schema).parquet(path)
+
+    records = [
+        replace(r, attempt=attempt)
+        for r in compute_partition_states(read_attempt(attempt), analyzers, "bucket")
+    ]
     repo.save(run_id, records)
     processed = sorted({r.bucket for r in records})
+
+    held: Dict[str, set] = {}
+    for r in prior:
+        held.setdefault(r.attempt, set()).add(r.bucket)
+    # A prior attempt may hold rows of buckets its log no longer names
+    # (a log edited to drop them); the new attempt's rows are all
+    # committed, since its records were computed from them.
+    parts = [
+        read_attempt(a).where(F.col("bucket").cast("string").isin(sorted(buckets)))
+        for a, buckets in sorted(held.items())
+    ]
+    checkpoint = reduce(DataFrame.union, [*parts, read_attempt(attempt)])
 
     merged = merge_states([*prior, *records])
     metrics = metrics_from_states(analyzers, merged)

@@ -2,7 +2,9 @@
 independent reference implementation (F1 + byte-identical scrub),
 gating suite, and checkpoint/resume."""
 
+import os
 import shutil
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -173,7 +175,8 @@ def assert_gate_equals_scan(result):
 def count_jobs(spark, fn):
     """(fn(), number of Spark jobs it started)."""
     sc = spark.sparkContext
-    group = "test-job-budget"
+    # a fresh group per call: the tracker keeps earlier calls' jobs
+    group = f"test-job-budget-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
         out = fn()
@@ -324,6 +327,126 @@ class TestPipelineEndToEnd:
         assert len(result.processed_buckets) == 8
         # checkpoint write, states job, per-bucket url frequencies
         assert jobs <= 8
+
+
+def attempt_dirs(work, run_id):
+    """The checkpoint's ``attempt=<id>`` directories of ``run_id``."""
+    root = os.path.join(work, "enriched", run_id)
+    if not os.path.isdir(root):
+        return []
+    return sorted(d for d in os.listdir(root) if d.startswith("attempt="))
+
+
+def assert_each_doc_once(result):
+    rows = result.enriched.agg(F.count("*"), F.countDistinct("url")).first()
+    assert tuple(rows) == (N_DOCS, N_DOCS)
+
+
+class TestCheckpointCommitProtocol:
+    def test_crash_between_write_and_commit(self, spark, pages, tmp_path, monkeypatch):
+        from hooqu_spark.lineage import StateRepository
+
+        work = str(tmp_path / "work")
+        half = pages.where(F.pmod(F.xxhash64("url"), F.lit(8)) < 4)
+        run_pipeline(spark, half, work, run_id="r", n_buckets=8)
+        repo = StateRepository(f"{work}/states")
+        before = repo.load("r")
+        (committed,) = attempt_dirs(work, "r")
+
+        def lost(self, run_id, records):
+            raise RuntimeError("process lost before the commit")
+
+        with monkeypatch.context() as m:
+            m.setattr(StateRepository, "save", lost)
+            with pytest.raises(RuntimeError, match="lost before the commit"):
+                run_pipeline(spark, pages, work, run_id="r", n_buckets=8)
+        assert repo.load("r") == before
+        (orphan,) = set(attempt_dirs(work, "r")) - {committed}
+
+        result = run_pipeline(spark, pages, work, run_id="r", n_buckets=8)
+        assert len(result.processed_buckets) == 4
+        dirs = attempt_dirs(work, "r")
+        assert orphan not in dirs and committed in dirs and len(dirs) == 2
+        assert_each_doc_once(result)
+        assert_gate_equals_scan(result)
+
+    def test_bucket_in_committed_and_uncommitted_attempt(self, spark, pages, tmp_path):
+        from hooqu_spark.lineage import StateRepository
+
+        work = str(tmp_path / "work")
+        run_pipeline(spark, pages, work, run_id="r", n_buckets=8)
+        (first,) = attempt_dirs(work, "r")
+        repo = StateRepository(f"{work}/states")
+        dropped = {"1", "5", "6"}
+        kept = [r for r in repo.load("r") if r.bucket not in dropped]
+        shutil.rmtree(f"{work}/states")
+        repo.save("r", kept)
+        assert {r.attempt for r in repo.load("r")} == {first.split("=", 1)[1]}
+
+        result = run_pipeline(spark, pages, work, run_id="r", n_buckets=8)
+        assert set(result.processed_buckets) == dropped
+        # the first attempt still holds rows of the recomputed buckets
+        stale = spark.read.parquet(os.path.join(work, "enriched", "r", first))
+        assert stale.where(F.col("bucket").isin([int(b) for b in dropped])).count() > 0
+        assert_each_doc_once(result)
+        assert_gate_equals_scan(result)
+
+    def test_no_resume_after_two_attempts_keeps_one(self, spark, pages, tmp_path):
+        work = str(tmp_path / "work")
+        half = pages.where(F.pmod(F.xxhash64("url"), F.lit(8)) < 4)
+        run_pipeline(spark, half, work, run_id="r", n_buckets=8)
+        run_pipeline(spark, pages, work, run_id="r", n_buckets=8)
+        assert len(attempt_dirs(work, "r")) == 2
+
+        result = run_pipeline(spark, pages, work, run_id="r", n_buckets=8, resume=False)
+        assert len(attempt_dirs(work, "r")) == 1
+        assert result.enriched.count() == N_DOCS
+
+    @pytest.mark.parametrize("glob_id", ["r*", "[r]un"])
+    def test_cleanup_spares_runs_a_glob_run_id_matches(self, spark, pages, tmp_path, glob_id):
+        work = str(tmp_path / "work")
+        run_pipeline(spark, pages, work, run_id="run", n_buckets=8)
+        committed = attempt_dirs(work, "run")
+
+        assert_each_doc_once(run_pipeline(spark, pages, work, run_id=glob_id, n_buckets=8))
+        assert attempt_dirs(work, "run") == committed
+
+        result = run_pipeline(spark, pages, work, run_id="run", n_buckets=8)
+        assert result.processed_buckets == [] and len(result.resumed_buckets) == 8
+        assert_each_doc_once(result)
+
+    def test_bucket_count_adds_no_listing_job(self, spark, pages, tmp_path):
+        pages.count()  # the cached fixture is not part of the run
+        jobs = {}
+        for n in (8, 64):
+            result, jobs[n] = count_jobs(
+                spark,
+                lambda: run_pipeline(spark, pages, str(tmp_path / f"w{n}"), n_buckets=n),
+            )
+            assert len(result.processed_buckets) == n
+        assert jobs[64] <= jobs[8]
+
+    def test_bucket_directory_log_is_rejected(self, spark, pages, tmp_path):
+        import pandas as pd
+
+        work = tmp_path / "work"
+        old_bucket = work / "enriched" / "r" / "bucket=3"
+        old_bucket.mkdir(parents=True)
+        (old_bucket / "part-00000.parquet").write_bytes(b"old layout")
+        log = work / "states" / "r"
+        log.mkdir(parents=True)
+        pd.DataFrame(
+            [("3", "Size|*|", "null")], columns=["bucket", "analyzer_key", "state_json"]
+        ).to_parquet(log / "states_old.parquet", index=False)
+        before = sorted(str(p) for p in work.rglob("*"))
+
+        with pytest.raises(ValueError, match="resume=False"):
+            run_pipeline(spark, pages, str(work), run_id="r", n_buckets=8)
+        assert sorted(str(p) for p in work.rglob("*")) == before
+
+        result = run_pipeline(spark, pages, str(work), run_id="r", n_buckets=8, resume=False)
+        assert not old_bucket.exists()
+        assert result.enriched.count() == N_DOCS
 
 
 class TestLineageStates:

@@ -185,6 +185,23 @@ class TestNoCartesianProducts:
         p = plan_str(embedding_near_duplicates(vecs, threshold=0.9, n_planes=2))
         assert p.count("ArrowEvalPython") == 1
 
+    def test_semantic_pairs_assign_udf_runs_once(self, spark):
+        # same shape with the k-means cluster id as the join key: an
+        # inferred isnotnull(_la) filter would run the assignment UDF
+        # a second time
+        from hooqu_spark.ops import semantic_duplicate_pairs
+
+        vecs = spark.createDataFrame(
+            [(i, [float(i % 7), 1.0, float(i % 3)]) for i in range(64)],
+            "vec_id long, embedding array<double>",
+        )
+        p = plan_str(
+            semantic_duplicate_pairs(
+                vecs, n_clusters=4, threshold=0.9, sample_size=64
+            )
+        )
+        assert p.count("ArrowEvalPython") == 1
+
     def test_semantic_pair_join_is_cluster_keyed(self, spark):
         from hooqu_spark.ops import semantic_duplicate_pairs
 
