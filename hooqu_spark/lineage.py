@@ -20,8 +20,10 @@ signature but stubbed (``aggregate_with``/``save_states_with`` hooks,
   ``pmod(xxhash64(url), n)`` for ``is_unique("url")``), so no group
   spans two buckets.
 * ``StateRepository`` — parquet-backed commit log of (run_id, bucket,
-  analyzer_key, state_json, attempt).  A killed run resumes by
-  processing only buckets absent from the committed log.
+  analyzer_key, state_json, attempt) on the Hadoop ``FileSystem`` of
+  its root URI (:mod:`hooqu_spark.store`), so the log lives wherever
+  Spark can write.  A killed run resumes by processing only buckets
+  absent from the committed log.
 
 The bucket count, not the data size, bounds driver memory: 100TB with
 10k buckets collects 10k small rows.
@@ -30,8 +32,6 @@ The bucket count, not the data size, bounds driver memory: 100TB with
 from __future__ import annotations
 
 import json
-import os
-import shutil
 import uuid
 from dataclasses import astuple, dataclass
 from typing import Dict, List, Optional, Sequence
@@ -39,6 +39,7 @@ from typing import Dict, List, Optional, Sequence
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from . import store
 from .analyzers.base import Analyzer, ScanShareableAnalyzer
 from .analyzers.fused import fused_states, metric_from_state, state_or_none
 from .analyzers.grouping import FrequencyBasedAnalyzer
@@ -130,6 +131,8 @@ def metrics_from_states(
 class StateRepository:
     """Parquet-backed commit log for per-bucket analyzer states.
 
+    ``root`` is a path or URI Spark can write (``file://``, ``hdfs://``,
+    ``s3a://``, ...); a scheme Spark cannot open raises.
     Layout: ``<root>/<run_id>/states_<uuid>.parquet`` with columns
     (bucket, analyzer_key, state_json, attempt).  ``save`` is the commit
     point: a bucket is "done" once its states are persisted here, so a
@@ -146,39 +149,27 @@ class StateRepository:
     def _run_dir(self, run_id: str) -> str:
         """``<root>/<run_id>``; ``run_id`` must name one directory, so
         that ``clear`` never deletes above or beside its own run."""
-        if run_id in ("", ".", "..") or os.path.basename(run_id) != run_id:
+        if run_id in ("", ".", "..") or "/" in run_id:
             raise ValueError(f"run_id must be a plain directory name, got {run_id!r}")
-        return os.path.join(self.root, run_id)
+        return f"{self.root}/{run_id}"
 
     def save(self, run_id: str, records: Sequence[StateRecord]) -> None:
         if not records:
             return
-        d = self._run_dir(run_id)
-        os.makedirs(d, exist_ok=True)
-        pdf = pd.DataFrame(
-            [astuple(r) for r in records],
-            columns=_RECORD_COLUMNS,
+        pdf = pd.DataFrame([astuple(r) for r in records], columns=_RECORD_COLUMNS)
+        store.commit_parquet(
+            self._run_dir(run_id), f"states_{uuid.uuid4().hex}.parquet", pdf
         )
-        tmp = os.path.join(d, f".tmp_{uuid.uuid4().hex}.parquet")
-        final = os.path.join(d, f"states_{uuid.uuid4().hex}.parquet")
-        pdf.to_parquet(tmp, index=False)
-        os.rename(tmp, final)  # atomic commit
 
     def clear(self, run_id: str) -> None:
         """Drop every committed state of ``run_id`` (a fresh log)."""
-        d = self._run_dir(run_id)
-        if os.path.isdir(d):
-            shutil.rmtree(d)
+        store.delete(self._run_dir(run_id))
 
     def load(self, run_id: str) -> List[StateRecord]:
-        d = self._run_dir(run_id)
-        if not os.path.isdir(d):
-            return []
         return [
             StateRecord(*row)
-            for f in sorted(os.listdir(d))
-            if f.startswith("states_") and f.endswith(".parquet")
-            for row in pd.read_parquet(os.path.join(d, f)).itertuples(index=False)
+            for pdf in store.read_parquet(self._run_dir(run_id), "states_")
+            for row in pdf.itertuples(index=False)
         ]
 
     def committed_buckets(self, run_id: str) -> List[str]:

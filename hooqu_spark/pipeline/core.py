@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from .. import store
 from ..analyzers import (
     Completeness,
     Compliance,
@@ -221,12 +222,13 @@ def run_pipeline(
     the union, over the attempts the log names, of each attempt's
     committed buckets.  A crash between (1) and (2) leaves an attempt
     no record names: the next run ignores its rows, deletes it, and
-    reprocesses its buckets; no duplicates, no loss.  One writer per
-    ``run_id``.  ``resume=False`` first deletes the run's committed
-    states and then every attempt, so every bucket is recomputed and
-    merged once.  A log written by the older bucket-directory layout
-    (records without an attempt) raises ``ValueError``: rerun with
-    ``resume=False``.
+    reprocesses its buckets; no duplicates, no loss.  When every bucket
+    ``0..n_buckets-1`` is committed, nothing is written and no states
+    job runs.  One writer per ``run_id``.  ``resume=False`` first
+    deletes the run's committed states and then every attempt, so every
+    bucket is recomputed and merged once.  A log written by the older
+    bucket-directory layout (records without an attempt) raises
+    ``ValueError``: rerun with ``resume=False``.
     """
     repo = StateRepository(f"{work_dir}/states")
     enriched_dir = f"{work_dir}/enriched/{run_id}"
@@ -235,15 +237,11 @@ def run_pipeline(
     # one per-bucket states job serves the lineage metrics and the gate
     analyzers = list(dict.fromkeys([*lineage_analyzers(rules), *gate]))
 
-    # deletes go through the filesystem the checkpoint write uses
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    root = Path(enriched_dir)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
     if not resume:
         # a fresh log: records beside the old ones would double-count
         # on a later resume
         repo.clear(run_id)
-        fs.delete(root, True)
+        store.delete(enriched_dir)
     prior = repo.load(run_id)
     if any(not r.attempt for r in prior):
         raise ValueError(
@@ -255,10 +253,9 @@ def run_pipeline(
     # crash leftovers and attempts that had nothing to write; listed,
     # not globbed, since run_id and work_dir may hold glob characters
     named = {f"attempt={r.attempt}" for r in prior}
-    for status in fs.listStatus(root) if fs.exists(root) else []:
-        name = status.getPath().getName()
-        if name.startswith("attempt=") and name not in named:
-            fs.delete(status.getPath(), True)
+    for name in store.list_names(enriched_dir, "attempt="):
+        if name not in named:
+            store.delete(f"{enriched_dir}/{name}")
 
     bucketed = pages.withColumn(
         "bucket", F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
@@ -275,11 +272,8 @@ def run_pipeline(
     enriched_new = enriched_new.select(
         *[c for c in enriched_new.columns if c != "bucket"], "bucket"
     )
-    attempt = uuid.uuid4().hex
-    enriched_new.write.mode("error").parquet(f"{enriched_dir}/attempt={attempt}")
-
     # Explicit paths read with the write plan's schema start no
-    # inference and no listing job.
+    # inference and no listing job; the schema comes from analysis.
     schema = enriched_new.schema
 
     def read_attempt(a: str) -> DataFrame:
@@ -288,24 +282,30 @@ def run_pipeline(
         path = re.sub(r"([\\{}\[\]*?])", r"\\\1", f"{enriched_dir}/attempt={a}")
         return spark.read.schema(schema).parquet(path)
 
-    records = [
-        replace(r, attempt=attempt)
-        for r in compute_partition_states(read_attempt(attempt), analyzers, "bucket")
-    ]
-    repo.save(run_id, records)
-    processed = sorted({r.bucket for r in records})
-
     held: Dict[str, set] = {}
     for r in prior:
         held.setdefault(r.attempt, set()).add(r.bucket)
     # A prior attempt may hold rows of buckets its log no longer names
-    # (a log edited to drop them); the new attempt's rows are all
-    # committed, since its records were computed from them.
+    # (a log edited to drop them).
     parts = [
         read_attempt(a).where(F.col("bucket").cast("string").isin(sorted(buckets)))
         for a, buckets in sorted(held.items())
     ]
-    checkpoint = reduce(DataFrame.union, [*parts, read_attempt(attempt)])
+    records = []
+    # A fully committed log has nothing to write: no attempt, no job.
+    if not {str(b) for b in range(n_buckets)} <= set(committed):
+        attempt = uuid.uuid4().hex
+        enriched_new.write.mode("error").parquet(f"{enriched_dir}/attempt={attempt}")
+        records = [
+            replace(r, attempt=attempt)
+            for r in compute_partition_states(read_attempt(attempt), analyzers, "bucket")
+        ]
+        repo.save(run_id, records)
+        # every row of the new attempt is committed: its records were
+        # computed from them
+        parts.append(read_attempt(attempt))
+    processed = sorted({r.bucket for r in records})
+    checkpoint = reduce(DataFrame.union, parts)
 
     merged = merge_states([*prior, *records])
     metrics = metrics_from_states(analyzers, merged)

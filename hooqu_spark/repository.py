@@ -2,33 +2,39 @@
 regression tracking (Deequ-style ``MetricsRepository``; absent from the
 reference but part of the Deequ surface it mirrors).
 
-Storage: one parquet file per save under ``<root>/metrics_<tag>_<seq>``
-with columns (tag, seq, entity, instance, name, value).  Driver-side
-pandas/pyarrow IO — metric sets are tiny.
+Storage: one parquet file per save, ``<root>/metrics_<tag>_<seq>.parquet``,
+with columns (tag, seq, entity, instance, name, value).  ``root`` is a
+path or URI Spark can write (``file://``, ``hdfs://``, ``s3a://``, ...):
+the files live on its Hadoop ``FileSystem`` (:mod:`hooqu_spark.store`),
+a scheme Spark cannot open raises, and nothing is created before the
+first save.  Metric sets are tiny, so pandas writes and reads them in
+the Python process; loading a tag reads every file of its history.
 """
 
 from __future__ import annotations
 
-import os
 import re
 from typing import Dict, List, Optional
 
 import pandas as pd
 
+from . import store
 from .analyzers.base import Analyzer
 from .metrics import Metric
+
+
+_COLUMNS = ["tag", "seq", "entity", "instance", "name", "value"]
 
 
 class MetricsRepository:
     def __init__(self, root: str):
         self.root = root
-        os.makedirs(root, exist_ok=True)
 
     def _next_seq(self, tag: str) -> int:
         pat = re.compile(rf"metrics_{re.escape(tag)}_(\d+)\.parquet$")
         seqs = [
             int(m.group(1))
-            for f in os.listdir(self.root)
+            for f in store.list_names(self.root, f"metrics_{tag}_")
             if (m := pat.match(f))
         ]
         return max(seqs, default=-1) + 1
@@ -41,29 +47,20 @@ class MetricsRepository:
             rows.append(
                 (tag, seq, d["entity"], d["instance"], d["name"], d["value"])
             )
-        pdf = pd.DataFrame(
-            rows, columns=["tag", "seq", "entity", "instance", "name", "value"]
-        )
-        pdf.to_parquet(
-            os.path.join(self.root, f"metrics_{tag}_{seq}.parquet"), index=False
-        )
+        pdf = pd.DataFrame(rows, columns=_COLUMNS)
+        store.commit_parquet(self.root, f"metrics_{tag}_{seq}.parquet", pdf)
         return seq
 
     def load(self, tag: Optional[str] = None) -> pd.DataFrame:
-        frames: List[pd.DataFrame] = []
-        for f in sorted(os.listdir(self.root)):
-            if not f.startswith("metrics_") or not f.endswith(".parquet"):
-                continue
-            # the file-name prefix only narrows the reads: tag "a" also
-            # prefixes tag "a_b"'s files, so the stored tag decides
-            if tag is not None and not f.startswith(f"metrics_{tag}_"):
-                continue
-            pdf = pd.read_parquet(os.path.join(self.root, f))
-            frames.append(pdf if tag is None else pdf[pdf["tag"] == tag])
+        # the file-name prefix only narrows the reads: tag "a" also
+        # prefixes tag "a_b"'s files, so the stored tag decides
+        prefix = "metrics_" if tag is None else f"metrics_{tag}_"
+        frames: List[pd.DataFrame] = [
+            pdf if tag is None else pdf[pdf["tag"] == tag]
+            for pdf in store.read_parquet(self.root, prefix)
+        ]
         if not frames:
-            return pd.DataFrame(
-                columns=["tag", "seq", "entity", "instance", "name", "value"]
-            )
+            return pd.DataFrame(columns=_COLUMNS)
         return pd.concat(frames, ignore_index=True)
 
     def latest(self, tag: str) -> pd.DataFrame:

@@ -382,33 +382,6 @@ class DataTypeHistogramState(DoubleValuedState):
         return max(c["boolean"], c["integral"], c["fractional"], c["string"]) / non_null
 
 
-@dataclass(frozen=True)
-class ApproxCountDistinctState(DoubleValuedState):
-    """HyperLogLog-style mergeable distinct-count state: max-merge of
-    per-register rank maxima.  Registers are stored as a tuple of ints."""
-
-    registers: tuple
-    p: int = 12  # 2^p registers
-
-    def sum(self, other: "ApproxCountDistinctState") -> "ApproxCountDistinctState":
-        regs = tuple(
-            max(a, b) for a, b in zip(self.registers, other.registers)
-        )
-        return ApproxCountDistinctState(regs, self.p)
-
-    def metric_value(self) -> float:
-        m = float(len(self.registers))
-        if m == 0:
-            return float("nan")
-        alpha = 0.7213 / (1 + 1.079 / m)
-        s = sum(2.0 ** (-r) for r in self.registers)
-        est = alpha * m * m / s
-        zeros = sum(1 for r in self.registers if r == 0)
-        if est <= 2.5 * m and zeros:
-            est = m * math.log(m / zeros)
-        return est
-
-
 _STATE_TYPES = {
     cls.__name__: cls
     for cls in (
@@ -421,7 +394,6 @@ _STATE_TYPES = {
         StandardDeviationState,
         QuantileState,
         QuantileSketchState,
-        ApproxCountDistinctState,
         FrequencyStats,
         CorrelationState,
         DataTypeHistogramState,
@@ -437,7 +409,6 @@ def state_from_dict(d: Dict[str, Any]) -> Optional[State]:
     cls = _STATE_TYPES[kind]
     names = {f.name for f in fields(cls)}
     kwargs = {k: v for k, v in d.items() if k in names}
-    for key in ("grid", "registers"):
-        if key in kwargs and kwargs[key] is not None:
-            kwargs[key] = tuple(kwargs[key])
+    if kwargs.get("grid") is not None:
+        kwargs["grid"] = tuple(kwargs["grid"])
     return cls(**kwargs)

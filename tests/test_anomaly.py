@@ -82,7 +82,7 @@ class TestRunWithAnomalyChecks:
         # three runs were persisted
         assert len(repo.diff("t", "Size", "*")) == 3
 
-    def test_tag_is_not_a_file_name_prefix(self, tmp_path):
+    def test_tag_is_not_a_file_name_prefix(self, spark, tmp_path):
         from hooqu_spark.metrics import DoubleMetric, Entity, Success
 
         def size(n):

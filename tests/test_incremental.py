@@ -157,14 +157,18 @@ def test_frequency_analyzers_are_rejected(spark, tmp_path):
         ingest_snapshots(spark, src, repo, "run", [Uniqueness(["id"])])
 
 
-def test_clear_deletes_only_its_own_run(tmp_path):
-    repo = StateRepository(str(tmp_path / "states"))
+def test_clear_deletes_only_its_own_run(spark, tmp_path):
     record = StateRecord("b0", "Size|*|", "null")
-    for run_id in ("keep", "drop"):
-        repo.save(run_id, [record])
-    for bad in ("", ".", "..", "../states", "keep/.."):
-        with pytest.raises(ValueError, match="plain directory name"):
-            repo.clear(bad)
-    repo.clear("drop")
-    assert repo.load("drop") == []
-    assert repo.load("keep") == [record]
+    # a plain path and a file:// URI root
+    for scheme, root in (("", tmp_path / "plain"), ("file://", tmp_path / "uri")):
+        repo = StateRepository(scheme + str(root))
+        for run_id in ("keep", "drop"):
+            repo.save(run_id, [record])
+        # the log lands at the URI's path
+        assert len(list((root / "keep").glob("states_*.parquet"))) == 1
+        for bad in ("", ".", "..", "../states", "keep/.."):
+            with pytest.raises(ValueError, match="plain directory name"):
+                repo.clear(bad)
+        repo.clear("drop")
+        assert repo.load("drop") == []
+        assert repo.load("keep") == [record]

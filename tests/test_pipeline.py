@@ -426,6 +426,25 @@ class TestCheckpointCommitProtocol:
             assert len(result.processed_buckets) == n
         assert jobs[64] <= jobs[8]
 
+    @pytest.mark.parametrize("scheme", ["", "file://"], ids=["plain", "file_uri"])
+    def test_resume_of_a_finished_run_starts_no_job(self, spark, pages, tmp_path, scheme):
+        work = str(tmp_path / "work")
+        first = run_pipeline(spark, pages, scheme + work, run_id="r", n_buckets=8)
+        dirs = attempt_dirs(work, "r")
+        assert len(dirs) == 1
+
+        result, jobs = count_jobs(
+            spark, lambda: run_pipeline(spark, pages, scheme + work, run_id="r", n_buckets=8)
+        )
+        assert jobs == 0
+        assert result.processed_buckets == [] and len(result.resumed_buckets) == 8
+        assert attempt_dirs(work, "r") == dirs
+        assert {a: m.value.get() for a, m in result.metrics.items()} == {
+            a: m.value.get() for a, m in first.metrics.items()
+        }
+        assert result.enriched.count() == N_DOCS
+        assert_gate_equals_scan(result)
+
     def test_bucket_directory_log_is_rejected(self, spark, pages, tmp_path):
         import pandas as pd
 

@@ -181,21 +181,28 @@ class TestMetricsRepository:
     def test_save_load_diff(self, tmp_path, spark, df_with_numeric_values):
         from hooqu_spark.analyzers import Mean, do_analysis_run
 
-        repo = MetricsRepository(str(tmp_path / "repo"))
         ctx = do_analysis_run(df_with_numeric_values, [Mean("att1"), Size()])
-        s0 = repo.save("daily", ctx.metric_map)
-        s1 = repo.save("daily", ctx.metric_map)
-        assert (s0, s1) == (0, 1)
+        # a plain path and a file:// URI root
+        for scheme, root in (("", tmp_path / "repo"), ("file://", tmp_path / "uri")):
+            repo = MetricsRepository(scheme + str(root))
+            s0 = repo.save("daily", ctx.metric_map)
+            s1 = repo.save("daily", ctx.metric_map)
+            assert (s0, s1) == (0, 1)
+            # the history lands at the URI's path
+            assert sorted(p.name for p in root.glob("metrics_*")) == [
+                "metrics_daily_0.parquet",
+                "metrics_daily_1.parquet",
+            ]
 
-        latest = repo.latest("daily")
-        assert set(latest["name"]) == {"Mean", "Size"}
-        assert latest[latest["name"] == "Mean"]["value"].iloc[0] == 3.5
+            latest = repo.latest("daily")
+            assert set(latest["name"]) == {"Mean", "Size"}
+            assert latest[latest["name"] == "Mean"]["value"].iloc[0] == 3.5
 
-        series = repo.diff("daily", "Mean", "att1")
-        assert list(series["seq"]) == [0, 1]
-        assert list(series["value"]) == [3.5, 3.5]
+            series = repo.diff("daily", "Mean", "att1")
+            assert list(series["seq"]) == [0, 1]
+            assert list(series["value"]) == [3.5, 3.5]
 
-    def test_empty_load(self, tmp_path):
+    def test_empty_load(self, spark, tmp_path):
         repo = MetricsRepository(str(tmp_path / "repo2"))
         assert repo.load().empty
         assert repo.latest("x").empty
