@@ -210,26 +210,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def topk_cosine_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Exact brute-force cosine top-5 for vec_id=3's embedding,
-        # computed JVM-side with a sequential fold so float semantics
-        # match the DuckDB oracle (both engines: float->double cast,
-        # left-to-right summation).
+        # computed JVM-side by pairwise_cosine against the query as a
+        # literal array, so float semantics match the DuckDB oracle
+        # (both engines: float->double cast, left-to-right summation).
+        from hooqu_spark.ops.similarity import pairwise_cosine
+
         emb = _t(spark, sf_dir, "embeddings").withColumn(
             "e", F.col("embedding").cast("array<double>")
         )
         q = emb.where(F.col("vec_id") == 3).select("e").first()[0]
         qlit = F.array(*[F.lit(float(x)) for x in q])
-        dot = F.aggregate(
-            F.zip_with("e", qlit, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        norm_e = F.sqrt(
-            F.aggregate(
-                F.transform("e", lambda x: x * x), F.lit(0.0), lambda a, v: a + v
-            )
-        )
-        qn = float(sum(x * x for x in q)) ** 0.5
-        cosine = F.round(dot / (norm_e * F.lit(qn)), 6)
+        cosine = F.round(pairwise_cosine(F.col("e"), qlit), 6)
         return (
             emb.select("vec_id", cosine.alias("cosine"))
             .orderBy(F.desc("cosine"), F.col("vec_id"))

@@ -52,26 +52,6 @@ def _f(value, default: float = float("nan")) -> float:
     return default if value is None else float(value)
 
 
-def _exact_rank_fraction(k: int, d: int) -> float:
-    """Fraction q such that q*d == k exactly in IEEE754 doubles.
-
-    Spark's exact ``percentile`` computes ``position = q * (count-1)``
-    and linearly interpolates; an exactly-integral position degenerates
-    to exact element selection.  ``k/d`` alone can round such that
-    ``(k/d)*d`` lands a few ulps off ``k``, so nudge q until the
-    product (same arithmetic on the JVM) is exactly k.
-    """
-    import math as _math
-
-    q = k / d
-    for _ in range(8):
-        p = q * d
-        if p == k:
-            break
-        q = _math.nextafter(q, 1.0 if p < k else 0.0)
-    return q
-
-
 class Size(ScanShareableAnalyzer):
     """Row count (DATASET entity).  Parity quirk preserved: the
     reference accepts ``where`` but ignores it (``size.py:24-30``)."""
@@ -217,9 +197,13 @@ class Quantile(ScanShareableAnalyzer):
 
     Distributed strategy: two phases sharing the fused scan.  Phase 1
     contributes ``count(col)`` to the shared ``df.agg``; phase 2 issues
-    ``percentile(col, k/(n-1))`` where ``k = banker's-round(q*(n-1))``
-    — an integral rank, so Spark's linear interpolation degenerates to
-    exact element selection.  Spark's exact ``percentile`` buffers
+    ``percentile_disc(p) WITHIN GROUP (ORDER BY col)`` at
+    ``p = (k + 0.5) / n`` where ``k = banker's-round(q*(n-1))``.
+    ``percentile_disc`` returns the value at the smallest 0-based rank
+    ``i`` with ``(i+1)/n >= p``; ``p`` sits half a rank clear of both
+    neighbours, so rounding in ``p`` can never move the pick off ``k``
+    (``percentile`` at ``k/(n-1)`` interpolates whenever no double
+    makes ``q*(n-1)`` exactly ``k``).  Spark's exact percentiles buffer
     values per group; for 100TB-scale use ``ApproxQuantile`` instead.
     """
 
@@ -243,33 +227,39 @@ class Quantile(ScanShareableAnalyzer):
     # -- two-phase protocol (used by the runner) ----------------------------
     def phase1_exprs(self, df: DataFrame) -> List[Column]:
         self._validate()
-        cond = where_cond(self.where)
-        return [F.count(gated(nan_safe_col(df, self.instance), cond))]
+        return [F.expr(f"count({self._gated_sql(df)})")]
 
-    def _gated_col(self, df: DataFrame) -> Column:
-        cond = where_cond(self.where)
-        return gated(nan_safe_col(df, self.instance), cond).cast("double")
+    def _gated_sql(self, df: DataFrame) -> str:
+        """The column both phases read (NaN -> NULL, ``where``-gated),
+        as SQL text because ``WITHIN GROUP`` has no DataFrame-API form;
+        phase 1 counts exactly the values phase 2 ranks."""
+        col = sql_ident(self.instance)
+        dtype = df.schema[self.instance].dataType
+        if isinstance(dtype, (T.DoubleType, T.FloatType)):
+            col = f"nanvl({col}, NULL)"
+        if self.where is not None:
+            col = f"CASE WHEN ({translate(self.where)}) THEN {col} END"
+        return f"CAST({col} AS DOUBLE)"
 
-    def _adjusted_fraction(self, n: int) -> float:
-        if n <= 1:
-            return 0.0
+    def _rank_fraction(self, n: int) -> float:
         k = round(self.quantile * (n - 1))  # banker's rounding = pandas 'nearest'
-        return _exact_rank_fraction(k, n - 1)
+        return (k + 0.5) / n
 
     @staticmethod
     def fused_phase2_expr(
         df: DataFrame, group: "List[Tuple[Quantile, int]]"
     ) -> Column:
-        """ONE ``percentile(col, array(q1..qk))`` for every exact
+        """ONE ``percentile_disc(array(p1..pk))`` for every exact
         quantile sharing a (column, where) pair — a single sort buffer
         per group instead of one per quantile (Spark's exact
-        ``percentile`` buffers all values; k quantiles on one column
+        percentiles buffer all values; k quantiles on one column
         would otherwise cost k buffers of the whole column)."""
         first = group[0][0]
-        fracs = F.array(
-            *[F.lit(q._adjusted_fraction(n)) for q, n in group]
+        fracs = ", ".join(repr(q._rank_fraction(n)) for q, n in group)
+        return F.expr(
+            f"percentile_disc(array({fracs})) WITHIN GROUP"
+            f" (ORDER BY {first._gated_sql(df)})"
         )
-        return F.percentile(first._gated_col(df), fracs)
 
     def state_from_phases(self, n: int, value) -> Optional[State]:
         if n == 0:

@@ -152,7 +152,7 @@ def do_analysis_run(
 
     # 3. Exact quantiles: phase 2 (one more fused job).  Quantiles
     #    sharing a (column, where) pair fuse into ONE
-    #    percentile(col, array(q1..qk)) — a single sort buffer per
+    #    percentile_disc(array(p1..pk)) — a single sort buffer per
     #    group instead of one full-column buffer per quantile.
     by_col: Dict[Tuple[str, Optional[str]], List[Tuple[Quantile, int]]] = {}
     for q, count in counts.items():

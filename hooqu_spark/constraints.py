@@ -200,84 +200,6 @@ def size_constraint(
     )
 
 
-def min_constraint(
-    column: str,
-    assertion: Callable[[float], bool],
-    where: Optional[str] = None,
-    hint: Optional[str] = None,
-) -> Constraint:
-    minimum = Minimum(column, where)
-    return NamedConstraint(
-        AnalysisBasedConstraint(minimum, assertion, hint=hint),
-        f"MinimumConstraint({minimum!r})",
-    )
-
-
-def max_constraint(
-    column: str,
-    assertion: Callable[[float], bool],
-    where: Optional[str] = None,
-    hint: Optional[str] = None,
-) -> Constraint:
-    maximum = Maximum(column, where)
-    return NamedConstraint(
-        AnalysisBasedConstraint(maximum, assertion, hint=hint),
-        f"MaximumConstraint({maximum!r})",
-    )
-
-
-def completeness_constraint(
-    column: str,
-    assertion: Callable[[float], bool],
-    where: Optional[str] = None,
-    hint: Optional[str] = None,
-) -> Constraint:
-    completeness = Completeness(column, where)
-    return NamedConstraint(
-        AnalysisBasedConstraint(completeness, assertion, hint=hint),
-        f"CompletenessConstraint({completeness!r})",
-    )
-
-
-def mean_constraint(
-    column: str,
-    assertion: Callable[[float], bool],
-    where: Optional[str] = None,
-    hint: Optional[str] = None,
-) -> Constraint:
-    mean = Mean(column, where)
-    return NamedConstraint(
-        AnalysisBasedConstraint(mean, assertion, hint=hint),
-        f"MeanConstraint({mean!r})",
-    )
-
-
-def sum_constraint(
-    column: str,
-    assertion: Callable[[float], bool],
-    where: Optional[str] = None,
-    hint: Optional[str] = None,
-) -> Constraint:
-    sum_ = Sum(column, where)
-    return NamedConstraint(
-        AnalysisBasedConstraint(sum_, assertion, hint=hint),
-        f"SumConstraint({sum_!r})",
-    )
-
-
-def standard_deviation_constraint(
-    column: str,
-    assertion: Callable[[float], bool],
-    where: Optional[str] = None,
-    hint: Optional[str] = None,
-) -> Constraint:
-    std = StandardDeviation(column, where)
-    return NamedConstraint(
-        AnalysisBasedConstraint(std, assertion, hint=hint),
-        f"StandardDeviationConstraint({std!r})",
-    )
-
-
 def quantile_constraint(
     column: str,
     quantile: float,
@@ -306,22 +228,10 @@ def compliance_constraint(
     )
 
 
-def uniqueness_constraint(
-    columns: Sequence[str],
-    assertion: Callable[[float], bool],
-    where: Optional[str] = None,
-    hint: Optional[str] = None,
-) -> Constraint:
-    uniqueness = Uniqueness(columns, where)
-    return NamedConstraint(
-        AnalysisBasedConstraint(uniqueness, assertion, hint=hint),
-        f"UniquenessConstraint({uniqueness!r})",
-    )
-
-
 def _simple_column_constraint(analyzer_cls, label: str):
-    """Factory-of-factories for single-column analyzer constraints
-    (Deequ-style extensions sharing one shape)."""
+    """Factory-of-factories for the ``(column, assertion, where, hint)``
+    constraints: the factory builds ``analyzer_cls(column, where)`` and
+    names the constraint ``label(analyzer)``."""
 
     def factory(
         column: str,
@@ -338,6 +248,16 @@ def _simple_column_constraint(analyzer_cls, label: str):
     return factory
 
 
+min_constraint = _simple_column_constraint(Minimum, "MinimumConstraint")
+max_constraint = _simple_column_constraint(Maximum, "MaximumConstraint")
+completeness_constraint = _simple_column_constraint(
+    Completeness, "CompletenessConstraint"
+)
+mean_constraint = _simple_column_constraint(Mean, "MeanConstraint")
+sum_constraint = _simple_column_constraint(Sum, "SumConstraint")
+standard_deviation_constraint = _simple_column_constraint(
+    StandardDeviation, "StandardDeviationConstraint"
+)
 min_length_constraint = _simple_column_constraint(
     MinLength, "MinLengthConstraint"
 )
@@ -353,6 +273,8 @@ data_type_constraint = _simple_column_constraint(
 
 
 def _grouping_constraint(analyzer_cls, label: str):
+    """Same shape over a list of columns (``analyzer_cls(columns, where)``)."""
+
     def factory(
         columns: Sequence[str],
         assertion: Callable[[float], bool],
@@ -368,6 +290,9 @@ def _grouping_constraint(analyzer_cls, label: str):
     return factory
 
 
+uniqueness_constraint = _grouping_constraint(
+    Uniqueness, "UniquenessConstraint"
+)
 distinctness_constraint = _grouping_constraint(
     Distinctness, "DistinctnessConstraint"
 )

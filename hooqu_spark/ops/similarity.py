@@ -212,6 +212,10 @@ def lsh_bucketed_topk(
     return brute_force_topk(probe, query_vec, k, vec_col, id_col)
 
 
+class _NoVectors(ValueError):
+    """The input has no non-NULL vector to train centroids on."""
+
+
 def _train_centroids(
     df: DataFrame,
     vec_col: str,
@@ -221,13 +225,15 @@ def _train_centroids(
     n_iters: int = 8,
     seed: int = 29,
 ) -> np.ndarray:
-    """Deterministic spherical k-means on a driver-side sample.
+    """Deterministic spherical k-means on a driver-side sample — the
+    one trainer behind IVF and SemDeDup.
 
-    The sample is the first ``sample_size`` rows by id (deterministic,
-    one narrow job); Lloyd iterations run in numpy on L2-normalized
-    vectors.  At 10^12 scale replace the driver loop with a few
-    ``groupBy(assignment).avg`` jobs over a 0.1% sample — the
-    assignment/probe machinery below is unchanged."""
+    The sample is the first ``sample_size`` non-NULL rows by id
+    (deterministic, one TakeOrderedAndProject job), so driver memory is
+    bounded by ``sample_size x dim`` whatever the table size; Lloyd
+    iterations run in numpy on L2-normalized vectors.  ``k`` is clamped
+    to the sample size (small-table fallback); an input without a
+    non-NULL vector raises ``ValueError``."""
     sample = (
         df.where(F.col(vec_col).isNotNull())
         .select(id_col, vec_col)
@@ -236,17 +242,14 @@ def _train_centroids(
         .collect()
     )
     if not sample:
-        # same contract as _train_centroids_distributed — without the
-        # guard the empty ndarray (ndim 1) crashes norm(axis=1) with an
-        # opaque AxisError
-        raise ValueError(
+        # without the guard the empty ndarray (ndim 1) crashes
+        # norm(axis=1) with an opaque AxisError
+        raise _NoVectors(
             "cannot train centroids: the input has no non-NULL vectors"
         )
     mat = np.asarray([r[1] for r in sample], dtype=np.float64)
     mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
     rng = np.random.RandomState(seed)
-    # small-table fallback: clamp k to the sample size (same contract
-    # as _train_centroids_distributed)
     n_centroids = min(n_centroids, len(mat))
     centroids = mat[rng.choice(len(mat), size=n_centroids, replace=False)]
     for _ in range(n_iters):
@@ -262,92 +265,29 @@ def _train_centroids(
     return centroids
 
 
-def _train_centroids_distributed(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    n_centroids: int,
-    sample_size: int = 65536,
-    n_iters: int = 8,
-) -> np.ndarray:
-    """Spherical k-means where each Lloyd iteration is a Spark job —
-    the 10^12-scale path: no vector ever collects to the driver except
-    the (n_centroids x dim) mean table.
-
-    * sample: deterministic hash sample (``xxhash64(id) % m``) sized to
-      ~``sample_size`` rows — stable across partitionings and retries.
-    * init: the ``n_centroids`` smallest-id sample vectors
-      (deterministic — no RNG, hence no seed parameter; if the sample
-      holds fewer rows than ``n_centroids``, k is clamped to the
-      sample size, the usual small-table fallback).
-    * iterate: assign via the Arrow GEMV udf, then
-      ``posexplode -> groupBy(list, dim).avg`` computes per-centroid
-      means map-side-combined; only n_centroids*dim tiny rows collect.
-    """
-    df = df.where(F.col(vec_col).isNotNull())
-    total = df.count()
-    if total > sample_size:
-        mod = max(1, total // sample_size)
-        sample = df.where(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(mod)) == 0
-        )
-    else:
-        sample = df
-    sample = sample.select(id_col, vec_col).persist()
-    try:
-        init = [
-            np.asarray(r[1], dtype=np.float64)
-            for r in sample.orderBy(id_col).limit(n_centroids).collect()
-        ]
-        if not init:
-            raise ValueError(
-                "cannot train IVF centroids: the input table is empty"
-            )
-        n_centroids = min(n_centroids, len(init))
-        centroids = np.stack(init[:n_centroids])
-        centroids /= np.maximum(
-            np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
-        )
-        for _ in range(n_iters):
-            assigned = sample.withColumn(
-                "_c", ivf_assign_udf(centroids)(F.col(vec_col))
-            )
-            rows = (
-                assigned.select("_c", F.posexplode(vec_col))
-                .groupBy("_c", "pos")
-                .agg(F.avg("col").alias("m"))
-                .collect()
-            )
-            new = centroids.copy()
-            for r in rows:
-                new[r["_c"], r["pos"]] = r["m"]
-            new /= np.maximum(
-                np.linalg.norm(new, axis=1, keepdims=True), 1e-12
-            )
-            if np.allclose(new, centroids, atol=1e-9):
-                centroids = new
-                break
-            centroids = new
-        return centroids
-    finally:
-        sample.unpersist()
-
-
 def ivf_assign_udf(centroids: np.ndarray):
+    """Arrow GEMV assignment of each vector to its nearest centroid:
+    ``struct<list: int, sim: double>`` — the list id and the winning
+    cosine (SemDeDup's keep-farthest-from-centroid policy reads it).
+    NaN rows (NULL vectors) argmax to list 0 with a NaN sim; exclude
+    NULL vectors upstream where the assignment matters."""
     from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("int")
-    def assign(col: pd.Series) -> pd.Series:
+    @pandas_udf("struct<list: int, sim: double>")
+    def assign(col: pd.Series) -> pd.DataFrame:
         mat = _vec_matrix(col, centroids.shape[1])
         with np.errstate(invalid="ignore"):
             mat /= np.maximum(
                 np.linalg.norm(mat, axis=1, keepdims=True), 1e-12
             )
-            # NaN rows argmax to 0 deterministically; exclude NULL
-            # vectors upstream where the assignment matters
-            return pd.Series(
-                (mat @ centroids.T).argmax(axis=1).astype(np.int32)
-            )
+            sims = mat @ centroids.T
+        best = sims.argmax(axis=1)
+        return pd.DataFrame(
+            {
+                "list": best.astype(np.int32),
+                "sim": sims[np.arange(len(best)), best],
+            }
+        )
 
     return assign
 
@@ -361,34 +301,22 @@ def ivf_topk(
     n_centroids: int = 16,
     n_probe: int = 4,
     seed: int = 29,
-    distributed_training: bool = False,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: assign every vector to
     its nearest of ``n_centroids`` spherical-k-means centroids, then
     scan only the ``n_probe`` lists nearest the query.
 
-    ``distributed_training=True`` trains centroids with Spark-job Lloyd
-    iterations over a hash sample (the 10^12-scale path); the default
-    driver-side numpy k-means suits small/medium tables.
-
     Scale path: materialize the assignment once and partition the
     table by it — the probe becomes a partition-pruned scan of
     ``n_probe/n_centroids`` of the data.  Recall rises with
     ``n_probe`` (== n_centroids is exhaustive/exact)."""
-    if distributed_training:
-        centroids = _train_centroids_distributed(
-            df, vec_col, id_col, n_centroids
-        )
-    else:
-        centroids = _train_centroids(
-            df, vec_col, id_col, n_centroids, seed=seed
-        )
+    centroids = _train_centroids(df, vec_col, id_col, n_centroids, seed=seed)
     q = np.asarray(query_vec, dtype=np.float64)
     qn = q / max(np.linalg.norm(q), 1e-12)
     probe_lists = np.argsort(-(centroids @ qn))[:n_probe].tolist()
 
     assigned = df.withColumn(
-        "_ivf_list", ivf_assign_udf(centroids)(F.col(vec_col))
+        "_ivf_list", ivf_assign_udf(centroids)(F.col(vec_col))["list"]
     )
     probed = assigned.where(F.col("_ivf_list").isin(probe_lists))
     return brute_force_topk(probed, query_vec, k, vec_col, id_col)
@@ -401,7 +329,6 @@ def ivf_build_index(
     id_col: str = "vec_id",
     n_centroids: int = 16,
     seed: int = 29,
-    distributed_training: bool = False,
 ) -> np.ndarray:
     """Materialize the IVF index the docstrings promise: assign every
     vector to its list ONCE and write the table PARTITIONED BY the list
@@ -413,19 +340,12 @@ def ivf_build_index(
     "skip rows after reading" and "never open the files" at 10^12
     vectors."""
     spark = df.sparkSession
-    if distributed_training:
-        centroids = _train_centroids_distributed(
-            df, vec_col, id_col, n_centroids
-        )
-    else:
-        centroids = _train_centroids(
-            df, vec_col, id_col, n_centroids, seed=seed
-        )
+    centroids = _train_centroids(df, vec_col, id_col, n_centroids, seed=seed)
     # NULL-embedding rows are excluded from the index: they can never
     # be a nearest neighbor, and assigning them to a real list would
     # pollute that partition's scan
     assigned = df.where(F.col(vec_col).isNotNull()).withColumn(
-        "ivf_list", ivf_assign_udf(centroids)(F.col(vec_col))
+        "ivf_list", ivf_assign_udf(centroids)(F.col(vec_col))["list"]
     )
     assigned.write.partitionBy("ivf_list").mode("overwrite").parquet(path)
     spark.createDataFrame(
@@ -457,6 +377,35 @@ def ivf_probe_index(
     return brute_force_topk(indexed, query_vec, k, vec_col, id_col)
 
 
+def pairwise_cosine(vec_a: F.Column, vec_b: F.Column) -> F.Column:
+    """JVM-side cosine between two array<double> columns — the one
+    cosine expression of :func:`cosine_similar_pairs`,
+    :func:`embedding_near_duplicates` and
+    :func:`semantic_duplicate_pairs`, whose DuckDB oracles replay it:
+    zip_with/aggregate sequential sums, and ``try_divide`` so a
+    zero-norm (degenerate) vector yields NULL instead of throwing
+    DIVIDE_BY_ZERO under ANSI mode.  NULL fails any ``>= threshold``,
+    so degenerate vectors are silently excluded; the oracles need no
+    guard (``list_cosine_similarity`` yields NaN for a zero-norm
+    vector, and NaN fails the threshold too)."""
+    dot = F.aggregate(
+        F.zip_with(vec_a, vec_b, lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+    def norm(c: F.Column) -> F.Column:
+        return F.sqrt(
+            F.aggregate(
+                F.transform(c, lambda x: x * x),
+                F.lit(0.0),
+                lambda acc, v: acc + v,
+            )
+        )
+
+    return F.try_divide(dot, norm(vec_a) * norm(vec_b))
+
+
 def cosine_similar_pairs(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -467,8 +416,8 @@ def cosine_similar_pairs(
     """EXACT all-pairs cosine similarity join: every ``(id_a, id_b)``
     with ``id_a < id_b`` and cosine >= threshold — recall 1.0, the
     oracle-able complement to :func:`embedding_near_duplicates` (which
-    shares the identical JVM cosine expression but only verifies
-    within LSH buckets).
+    shares :func:`pairwise_cosine` but only verifies within LSH
+    buckets).
 
     O(n^2) by construction (broadcast nested-loop join on the id
     inequality), so this is the small-table exact baseline and the
@@ -478,28 +427,7 @@ def cosine_similar_pairs(
     the borderline decisions matters (the driver contract uses 6)."""
     a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
     b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
-    dot = F.aggregate(
-        F.zip_with("_va", "_vb", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-    def norm(c: str) -> F.Column:
-        return F.sqrt(
-            F.aggregate(
-                F.transform(c, lambda x: x * x),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        )
-
-    # try_divide: a zero-norm (degenerate) embedding yields NULL cosine
-    # instead of throwing DIVIDE_BY_ZERO under ANSI mode; NULL fails the
-    # >= threshold predicate so degenerate vectors are silently excluded.
-    # The DuckDB oracle needs no explicit guard: list_cosine_similarity
-    # yields NaN for a zero-norm vector, and NaN likewise fails the
-    # >= threshold — the exclusion agrees cross-engine by construction.
-    cosine = F.try_divide(dot, norm("_va") * norm("_vb"))
+    cosine = pairwise_cosine(F.col("_va"), F.col("_vb"))
     if round_to is not None:
         cosine = F.round(cosine, round_to)
     return (
@@ -519,8 +447,7 @@ def embedding_near_duplicates(
     round_to: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by cosine >= threshold, LSH-bucketed: exact
-    cosine is verified only within buckets (JVM-side arithmetic on the
-    normalized vectors via zip_with/aggregate).
+    cosine (:func:`pairwise_cosine`) is verified only within buckets.
 
     Bucketing projects onto the md5-derived ±1 planes with
     :func:`_lsh_fold`'s fixed left-to-right addition order, so the whole
@@ -543,23 +470,7 @@ def embedding_near_duplicates(
         id_col, vec_col, "_bucket"
     )
     l, r = bucketed.alias("l"), bucketed.alias("r")
-    dot = F.aggregate(
-        F.zip_with(
-            F.col(f"l.{vec_col}"), F.col(f"r.{vec_col}"), lambda x, y: x * y
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    norm = lambda side: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(F.col(f"{side}.{vec_col}"), lambda x: x * x),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-    # Same zero-norm guard as cosine_similar_pairs (shared arithmetic
-    # contract): degenerate vectors yield NULL, never DIVIDE_BY_ZERO.
-    cosine = F.try_divide(dot, norm("l") * norm("r"))
+    cosine = pairwise_cosine(F.col(f"l.{vec_col}"), F.col(f"r.{vec_col}"))
     if round_to is not None:
         cosine = F.round(cosine, round_to)
     return (
@@ -581,77 +492,6 @@ def embedding_near_duplicates(
 # Semantic (embedding-cluster) dedup — SemDeDup
 # ---------------------------------------------------------------------------
 
-def pairwise_cosine(vec_a: F.Column, vec_b: F.Column) -> F.Column:
-    """JVM-side cosine between two array<double> columns — the shared
-    arithmetic contract of :func:`cosine_similar_pairs` /
-    :func:`embedding_near_duplicates` (zip_with/aggregate sequential
-    sums, ``try_divide`` so a zero-norm vector yields NULL, never
-    DIVIDE_BY_ZERO under ANSI mode; NULL fails any >= threshold)."""
-    dot = F.aggregate(
-        F.zip_with(vec_a, vec_b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-    def norm(c: F.Column) -> F.Column:
-        return F.sqrt(
-            F.aggregate(
-                F.transform(c, lambda x: x * x),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        )
-
-    return F.try_divide(dot, norm(vec_a) * norm(vec_b))
-
-
-def ivf_assign_sim_udf(centroids: np.ndarray):
-    """Arrow GEMV assignment like :func:`ivf_assign_udf`, but also
-    returns the winning cosine — needed by SemDeDup's keep-farthest-
-    from-centroid survivor policy."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("struct<list: int, sim: double>")
-    def assign(col: pd.Series) -> pd.DataFrame:
-        mat = _vec_matrix(col, centroids.shape[1])
-        with np.errstate(invalid="ignore"):
-            mat /= np.maximum(
-                np.linalg.norm(mat, axis=1, keepdims=True), 1e-12
-            )
-            sims = mat @ centroids.T
-        best = sims.argmax(axis=1)  # NaN rows -> 0, sim NaN
-        return pd.DataFrame(
-            {
-                "list": best.astype(np.int32),
-                "sim": sims[np.arange(len(best)), best],
-            }
-        )
-
-    return assign
-
-
-def _train_sem_centroids(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    n_clusters: int,
-    sample_size: int,
-    n_iters: int,
-    seed: int,
-    distributed_training: bool,
-) -> np.ndarray:
-    train = (
-        _train_centroids_distributed
-        if distributed_training
-        else _train_centroids
-    )
-    kwargs = {} if distributed_training else {"seed": seed}
-    return train(
-        df, vec_col, id_col, n_clusters,
-        sample_size=sample_size, n_iters=n_iters, **kwargs,
-    )
-
-
 def semantic_duplicate_pairs(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -662,7 +502,6 @@ def semantic_duplicate_pairs(
     sample_size: int = 4096,
     n_iters: int = 8,
     seed: int = 29,
-    distributed_training: bool = False,
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """Within-cluster near-duplicate pairs ``(id_a, id_b, cosine)`` —
@@ -690,24 +529,25 @@ def semantic_duplicate_pairs(
     (``semantic_dedup``'s centroid_far policy needs it again for the
     survivor scoring) pass it in instead of retraining."""
     df = df.where(F.col(vec_col).isNotNull())
-    # no non-NULL vectors: nothing to cluster or pair — fall through
-    # the single-block branch (valid empty result with the pair
-    # schema) instead of crashing centroid training on an empty sample
-    if n_clusters > 1 and centroids is None and df.select(vec_col).first() is None:
-        n_clusters = 1
+    if n_clusters > 1 and centroids is None:
+        try:
+            centroids = _train_centroids(
+                df, vec_col, id_col, n_clusters, sample_size, n_iters, seed
+            )
+        except _NoVectors:
+            # nothing to cluster or pair: the single-block branch
+            # returns a valid empty result with the pair schema
+            n_clusters = 1
     if n_clusters <= 1:
         assigned = df.select(
             F.col(id_col), F.col(vec_col), F.lit(0).alias("_sem_list")
         )
     else:
-        if centroids is None:
-            centroids = _train_sem_centroids(
-                df, vec_col, id_col, n_clusters, sample_size, n_iters,
-                seed, distributed_training,
-            )
         # the UDF never returns NULL; saying so keeps the join from
         # inferring an isnotnull(_la) filter that runs the UDF twice
-        cluster = F.coalesce(ivf_assign_udf(centroids)(F.col(vec_col)), F.lit(-1))
+        cluster = F.coalesce(
+            ivf_assign_udf(centroids)(F.col(vec_col))["list"], F.lit(-1)
+        )
         assigned = df.select(
             F.col(id_col), F.col(vec_col), cluster.alias("_sem_list")
         )
@@ -748,7 +588,6 @@ def semantic_dedup(
     sample_size: int = 4096,
     n_iters: int = 8,
     seed: int = 29,
-    distributed_training: bool = False,
 ) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al., arXiv:2303.09540):
     cluster embeddings, prune near-duplicates (cosine >= threshold)
@@ -779,20 +618,18 @@ def semantic_dedup(
         )
     # centroid_far needs the trained model twice (blocking + survivor
     # scoring) — train ONCE here and thread it through
+    centroids = None
     if keep == "centroid_far":
-        non_null = df.where(F.col(vec_col).isNotNull())
-        if non_null.select(vec_col).first() is None:
+        try:
+            centroids = _train_centroids(
+                df, vec_col, id_col, n_clusters, sample_size, n_iters, seed
+            )
+        except _NoVectors:
             # no non-NULL embeddings -> no pairs -> every row survives
             return df
-        centroids = _train_sem_centroids(
-            non_null, vec_col, id_col,
-            n_clusters, sample_size, n_iters, seed, distributed_training,
-        )
-    else:
-        centroids = None
     pairs = semantic_duplicate_pairs(
         df, id_col, vec_col, n_clusters, threshold, round_to,
-        sample_size, n_iters, seed, distributed_training, centroids,
+        sample_size, n_iters, seed, centroids,
     )
     if keep == "min_id":
         from .dedup import dedup_by_clusters
@@ -802,7 +639,7 @@ def semantic_dedup(
     comps = duplicate_clusters(pairs)  # (id, cluster-min id)
     sims = df.select(
         F.col(id_col).alias("id"),
-        ivf_assign_sim_udf(centroids)(F.col(vec_col))["sim"].alias("_sim"),
+        ivf_assign_udf(centroids)(F.col(vec_col))["sim"].alias("_sim"),
     )
     # survivor per duplicate group: argmin centroid-cosine, tie -> min
     # id; one tiny groupBy over (component, member) rows

@@ -8,6 +8,7 @@ behavior the property tests asserted.
 import math
 
 import numpy as np
+import pandas as pd
 import pytest
 
 import hooqu_spark.patterns as hpatterns
@@ -248,6 +249,40 @@ class TestQuantileAnalyzer:
         # pandas interpolation='nearest' with banker's rounding at ties
         result = Quantile("att1", q).calculate(df_with_numeric_values).value.get()
         assert result == expected
+
+    def test_returns_a_data_value_when_no_double_hits_the_rank(self, spark):
+        # n-1 = 47, k = 12: no double q makes q*47 exactly 12, so an
+        # interpolating percentile returned 72.36999999999988
+        df = spark.createDataFrame(
+            [(0.0,)] * 12 + [(72.37,)] * 36, "att1 double"
+        )
+        want = pd.Series([0.0] * 12 + [72.37] * 36).quantile(
+            0.25, interpolation="nearest"
+        )
+        assert want == 72.37
+        assert Quantile("att1", 0.25).calculate(df).value.get() == want
+
+    def test_fused_quantiles_match_pandas_nearest(self, spark):
+        # the runner's fused phase 2 (one percentile_disc per column and
+        # where) with NaN and where-gated rows left out, as pandas does
+        from hooqu_spark.analyzers.runner import do_analysis_run
+
+        rng = np.random.RandomState(5)
+        vals = np.round(rng.standard_normal(101) * 100, 2).tolist()
+        rows = [(v, i % 3) for i, v in enumerate(vals)] + [(float("nan"), 0)]
+        df = spark.createDataFrame(rows, "att1 double, g long")
+        qs = [0.0, 0.1, 0.25, 0.5, 0.9, 0.99, 1.0]
+        analyzers = [Quantile("att1", q) for q in qs] + [
+            Quantile("att1", q, where="g = 1") for q in qs
+        ]
+        ctx = do_analysis_run(df, analyzers)
+        s = pd.Series(vals)
+        gated = pd.Series([v for i, v in enumerate(vals) if i % 3 == 1])
+        for q in qs:
+            got = ctx.metric(Quantile("att1", q)).value.get()
+            assert got == s.quantile(q, interpolation="nearest"), q
+            got = ctx.metric(Quantile("att1", q, where="g = 1")).value.get()
+            assert got == gated.quantile(q, interpolation="nearest"), q
 
 
 class TestComplianceAnalyzer:

@@ -1,6 +1,8 @@
 """Tests for the training-data pipeline operators (dedup, similarity,
 text analysis, multimodal plumbing)."""
 
+import uuid
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -330,8 +332,8 @@ class TestSimilarity:
         assert any(r["id_a"] == 3 and r["id_b"] == 7 for r in pairs)
 
     def test_ivf_distributed_training_full_probe_exact(self, vecs):
-        # distributed Lloyd training (Spark-job iterations) + full probe
-        # must equal the exact brute-force top-k
+        # the driver-sample k-means (the one trainer) + full probe must
+        # equal the exact brute-force top-k
         from hooqu_spark.ops import brute_force_topk, ivf_topk
 
         pdf = vecs.toPandas()
@@ -341,7 +343,6 @@ class TestSimilarity:
             r["vec_id"]
             for r in ivf_topk(
                 vecs, q, k=5, n_centroids=8, n_probe=8,
-                distributed_training=True,
             ).collect()
         ]
         assert got == want
@@ -356,7 +357,6 @@ class TestSimilarity:
             r["vec_id"]
             for r in ivf_topk(
                 vecs, q, k=5, n_centroids=8, n_probe=4,
-                distributed_training=True,
             ).collect()
         }
         # probing half the lists must still find the query itself and
@@ -1182,6 +1182,21 @@ class TestSemanticDedup:
         for p in pairs:
             assert p.cosine >= 0.99
 
+    def test_pairs_start_one_job_the_training_sample(self, spark, semvecs):
+        # emptiness is read off the trainer's own sample: no separate
+        # probe job before the (lazy) pair frame comes back
+        from hooqu_spark.ops import semantic_duplicate_pairs
+
+        sc = spark.sparkContext
+        group = f"semdedup-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            semantic_duplicate_pairs(semvecs, n_clusters=4)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
 
 class TestNullEmbeddingRobustness:
     """A web-scale embeddings table WILL contain NULL rows (failed
@@ -1261,15 +1276,14 @@ class TestNullEmbeddingRobustness:
         assert set(out.columns) == {"id_a", "id_b", "cosine"}
 
     def test_semantic_dedup_distributed_training_path(self, nvecs):
-        # the 10^12-scale trainer (Spark-job Lloyd iterations) must
-        # plug into semantic dedup and still drop the exact copy
+        # semantic dedup at its default sample size (which covers the
+        # whole table here) must still drop the exact copy
         from hooqu_spark.ops import semantic_dedup
 
         out = {
             r.vec_id
             for r in semantic_dedup(
                 nvecs, n_clusters=4, threshold=0.999, round_to=6,
-                distributed_training=True,
             ).collect()
         }
         assert 99 in out and 4 in out and 90 not in out
