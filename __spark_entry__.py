@@ -911,7 +911,7 @@ def oracle_sql() -> dict[str, str]:
     # n-gram Jaccard shingle CTE shared by the pairs and dedup oracles:
     # tokens = non-empty chunks of a whitespace split; docs shorter
     # than 3 words contribute their full text as the single shingle
-    # (mirrors hooqu_spark.ops.dedup._shingle_str_col).
+    # (mirrors hooqu_spark.ops.dedup._shingles_of_words over _words_of).
     shingle_cte = (
         "WITH w AS (SELECT doc_id,"
         " list_filter(regexp_split_to_array(coalesce(text,''), '\\s+'),"

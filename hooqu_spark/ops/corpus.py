@@ -25,7 +25,7 @@ from typing import Dict
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import _shingle_str_col, shingle_frame
+from .dedup import _shingles_of_words, _words_of, shingle_frame
 
 
 def dedup_lines_by_frequency(
@@ -162,7 +162,9 @@ def flag_contamination(
     bench_shingles = F.broadcast(
         benchmark.select(
             F.explode(
-                _shingle_str_col(benchmark_text_col, shingle_size)
+                _shingles_of_words(
+                    _words_of(benchmark_text_col), shingle_size
+                )
             ).alias("_sh")
         ).distinct()
     )

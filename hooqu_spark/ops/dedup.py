@@ -17,7 +17,10 @@ Survivor policy (deterministic): within a duplicate cluster the row
 with the smallest id survives; a row is dropped if ANY
 smaller-id candidate matches at >= threshold (greedy-by-id, one pass —
 at 10^12 docs full transitive closure needs iterative label
-propagation; the greedy policy needs none).
+propagation; the greedy policy needs none).  Every pair-based deduper
+is a producer of an ``(id_a, id_b, ...)`` pair table with
+``id_a < id_b`` followed by :func:`_drop_pair_losers`, the one step
+that drops each pair's ``id_b``.
 """
 
 from __future__ import annotations
@@ -76,6 +79,17 @@ def dedup_against(
     if broadcast_reference:
         keys = F.broadcast(keys)
     return df.join(keys, on=key_cols, how="left_anti")
+
+
+def _drop_pair_losers(
+    df: DataFrame, pairs: DataFrame, id_col: str
+) -> DataFrame:
+    """The greedy-by-id survivor step: drop every ``id_b`` of an
+    ``(id_a, id_b, ...)`` pair table (``id_a < id_b``) from ``df``.
+    The ``distinct`` only shrinks the anti join's build side: an
+    ``id_b`` in several pairs drops its row once either way."""
+    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
+    return df.join(losers, on=id_col, how="left_anti")
 
 
 # ---------------------------------------------------------------------------
@@ -164,10 +178,15 @@ def shingle_frame(
     )
 
 
-def _signatures_from_shingles(
-    sh_df: DataFrame, n_hashes: int = 64
+def minhash_signatures(
+    df: DataFrame,
+    id_col: str,
+    text_col: str = "text",
+    n_hashes: int = 64,
+    shingle_size: int = 3,
 ) -> DataFrame:
-    """(id, signature array<long>) from a ``(id, sh)`` shingle frame.
+    """(id, signature array<long>): sig[i] = min over distinct word
+    ``shingle_size``-gram shingles s of (a_i * md5_32(s) + b_i) mod p.
 
     Plan: explode shingles -> md5-derived 32-bit hash per shingle ->
     ONE whole-stage-codegen hash aggregate computing all ``n_hashes``
@@ -175,15 +194,19 @@ def _signatures_from_shingles(
     carries exactly ``n_docs x n_hashes`` longs no matter how long the
     documents are — the 100 TB-safe shape.  Every doc has >= 1 shingle
     (empty text yields the [""] shingle), so no rows are lost to the
-    explode."""
+    explode.  Fully JVM-side (no Python kernel) and bit-reproducible in
+    DuckDB — the driver contract hash-verifies both the raw signatures
+    and the dedup survivor set."""
     a, b = _minhash_params(n_hashes)
     # explode_outer: plain explode makes the optimizer infer a
     # `size(sh) > 0` filter that re-evaluates the whole shingle
     # expression a second time below the exchange; the outer variant
     # skips the inferred filter, and `sh` is never empty anyway (empty
     # docs yield the [""] shingle)
-    ex = sh_df.select("id", F.explode_outer("sh").alias("_s")).select(
-        "id", _str_hash32(F.col("_s")).alias("_h")
+    ex = (
+        shingle_frame(df, id_col, text_col, shingle_size)
+        .select("id", F.explode_outer("sh").alias("_s"))
+        .select("id", _str_hash32(F.col("_s")).alias("_h"))
     )
     p = F.lit(_MERSENNE)
     mins = ex.groupBy("id").agg(
@@ -199,24 +222,6 @@ def _signatures_from_shingles(
         F.array(*[F.col(f"_m{i}") for i in range(n_hashes)]).alias(
             "signature"
         ),
-    )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    n_hashes: int = 64,
-    shingle_size: int = 3,
-) -> DataFrame:
-    """(id, signature array<long>): sig[i] = min over distinct word
-    ``shingle_size``-gram shingles s of (a_i * md5_32(s) + b_i) mod p.
-
-    Fully JVM-side (codegen'd aggregate, no Python kernel) and
-    bit-reproducible in DuckDB — the driver contract hash-verifies both
-    the raw signatures and the dedup survivor set."""
-    return _signatures_from_shingles(
-        shingle_frame(df, id_col, text_col, shingle_size), n_hashes
     )
 
 
@@ -291,31 +296,15 @@ def minhash_dedup(
     shingle_size: int = 3,
 ) -> DataFrame:
     """Drop rows whose estimated Jaccard vs any smaller-id candidate is
-    >= threshold (greedy-by-id survivor policy).
-
-    The signature table feeds three plan branches (band explosion plus
-    both sides of the agreement join); it is persisted so the fused
-    shingle-hash aggregate — the expensive per-doc step — runs ONCE
-    per document instead of three times, then released after the
-    (small) loser-id set is materialized via ``localCheckpoint``.
-    Entirely JVM-side and DuckDB-reproducible (the driver contract
-    hash-verifies the survivor set at sf0.01).
+    >= threshold (greedy-by-id survivor policy): the survivor step over
+    :func:`minhash_similar_pairs`.  Entirely JVM-side and
+    DuckDB-reproducible (the driver contract hash-verifies the survivor
+    set at sf0.01).
     """
-    sigs = minhash_signatures(
-        df, id_col, text_col, n_hashes, shingle_size
-    ).persist()
-    try:
-        pairs = lsh_candidate_pairs(sigs, n_bands, dedupe=False)
-        scored = _signature_agreement(pairs, sigs)
-        losers = (
-            scored.where(F.col("est_jaccard") >= threshold)
-            .select(F.col("id_b").alias(id_col))
-            .distinct()
-            .localCheckpoint()  # materialize before releasing sigs
-        )
-    finally:
-        sigs.unpersist()
-    return df.join(losers, on=id_col, how="left_anti")
+    pairs = minhash_similar_pairs(
+        df, id_col, text_col, threshold, n_hashes, n_bands, shingle_size
+    )
+    return _drop_pair_losers(df, pairs, id_col)
 
 
 def minhash_similar_pairs(
@@ -329,7 +318,13 @@ def minhash_similar_pairs(
 ) -> DataFrame:
     """``(id_a, id_b, est_jaccard)`` for every LSH candidate pair with
     estimated Jaccard >= threshold — the pair table behind
-    :func:`minhash_dedup`, exposed for cluster-based policies."""
+    :func:`minhash_dedup` and :func:`minhash_dedup_clusters`.
+
+    The signature table feeds three plan branches (band explosion plus
+    both sides of the agreement join); it is persisted so the fused
+    shingle-hash aggregate — the expensive per-doc step — runs ONCE
+    per document instead of three times, then released after the
+    (small) pair table is materialized via ``localCheckpoint``."""
     sigs = minhash_signatures(
         df, id_col, text_col, n_hashes, shingle_size
     ).persist()
@@ -460,7 +455,7 @@ def simhash_dedup(
         F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))
     )
     try:
-        losers = (
+        pairs = (
             l.join(
                 r,
                 (F.col("l.chunk") == F.col("r.chunk"))
@@ -468,13 +463,12 @@ def simhash_dedup(
                 & (F.col("l.id") < F.col("r.id")),
             )
             .where(hamming <= max_hamming)
-            .select(F.col("r.id").alias(id_col))
-            .distinct()
-            .localCheckpoint()
+            .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
+            .localCheckpoint()  # materialize before releasing sigs
         )
     finally:
         sigs.unpersist()
-    return df.join(losers, on=id_col, how="left_anti")
+    return _drop_pair_losers(df, pairs, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -489,20 +483,18 @@ def _cc_min_neighbor(sym: DataFrame) -> DataFrame:
 
 
 def duplicate_clusters(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iterations: int = 40,
+    pairs: DataFrame, max_iterations: int = 40
 ) -> DataFrame:
-    """Transitive duplicate clusters from a pair list: connected
-    components by the alternating large-star / small-star algorithm
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14), with no driver-side graph.  Pairwise dedup (drop the
-    larger of each pair) under-merges chains A~B~C; this collapses the
-    whole chain even when A is not directly similar to C.  It converges
-    in O(log n) rounds, where min-label propagation needs O(diameter),
-    so adversarially long duplicate chains (quote-of-a-quote-of-a-quote
-    pages) collapse in a handful of rounds.
+    """Transitive duplicate clusters from an ``(id_a, id_b, ...)`` pair
+    table: connected components by the alternating large-star /
+    small-star algorithm (Kiveris et al., "Connected Components in
+    MapReduce and Beyond", SoCC'14), with no driver-side graph.
+    Pairwise dedup (drop the larger of each pair) under-merges chains
+    A~B~C; this collapses the whole chain even when A is not directly
+    similar to C.  It converges in O(log n) rounds, where min-label
+    propagation needs O(diameter), so adversarially long duplicate
+    chains (quote-of-a-quote-of-a-quote pages) collapse in a handful of
+    rounds.
 
     Each round is two join+groupBy passes over the EDGE table:
 
@@ -517,7 +509,7 @@ def duplicate_clusters(
     isolated nodes never appear in ``pairs`` and are absent.
     """
     edges = (
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
+        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint()
@@ -573,20 +565,18 @@ def duplicate_clusters(
 
 
 def dedup_by_clusters(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
+    df: DataFrame, pairs: DataFrame, id_col: str
 ) -> DataFrame:
     """Keep one representative (smallest id) per transitive duplicate
-    cluster (:func:`duplicate_clusters`); rows not in any pair survive
+    cluster (:func:`duplicate_clusters`): the survivor step over the
+    star edges ``(cluster, id)``; rows not in any pair survive
     untouched."""
-    clusters = duplicate_clusters(pairs, id_a, id_b)
-    losers = clusters.where(F.col("id") != F.col("cluster")).select(
-        F.col("id").alias(id_col)
+    star = duplicate_clusters(pairs).where(F.col("id") != F.col("cluster"))
+    return _drop_pair_losers(
+        df,
+        star.select(F.col("cluster").alias("id_a"), F.col("id").alias("id_b")),
+        id_col,
     )
-    return df.join(losers, id_col, "left_anti")
 
 
 def _shingles_of_words(words: F.Column, shingle_size: int) -> F.Column:
@@ -614,17 +604,6 @@ def _shingles_of_words(words: F.Column, shingle_size: int) -> F.Column:
     return F.when(
         n < k, F.array(F.array_join(words, " "))
     ).otherwise(F.array_distinct(acc))
-
-
-def _shingle_str_col(text_col: str, shingle_size: int):
-    """Distinct word ``shingle_size``-gram STRINGS as a single Catalyst
-    array expression (tokens = non-empty chunks of a whitespace split).
-    Prefer :func:`shingle_frame` in per-document hot paths — it
-    evaluates the tokenizing split once per row; this fused form is for
-    contexts that need one inline expression (e.g. the broadcast side
-    of the decontamination join)."""
-    words = _words_of(text_col)
-    return _shingles_of_words(words, shingle_size)
 
 
 def jaccard_similar_pairs(
@@ -711,50 +690,16 @@ def ngram_jaccard_dedup(
     text_col: str = "text",
     threshold: float = 0.8,
     shingle_size: int = 3,
-    n_hashes: int = 64,
-    n_bands: int = 16,
-    exact: bool = True,
 ) -> DataFrame:
     """Drop rows whose EXACT n-gram Jaccard vs any smaller-id match is
-    >= threshold (greedy-by-id survivor policy).
-
-    ``exact=True`` (default): candidates from the lossless AllPairs
-    prefix-filter index (:func:`jaccard_similar_pairs`) — guaranteed
-    recall 1.0, fully SQL-equivalent semantics (DuckDB-oracled in the
-    contract suite).
-
-    ``exact=False``: candidates from MinHash-LSH banding (probabilistic
-    recall), verified with exact Jaccard over the full shingle-string
-    arrays (JVM ``array_intersect``) — the cheaper variant when a
-    bounded miss rate is acceptable.  The shingle frame is computed
-    ONCE and persisted; the minhash signatures derive from it, so each
-    document is shingled exactly once across all plan branches;
-    released after the loser-id set is materialized."""
-    if exact:
-        pairs = jaccard_similar_pairs(
-            df, id_col, text_col, threshold, shingle_size
-        )
-        losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-        return df.join(losers, on=id_col, how="left_anti")
-    sh = shingle_frame(df, id_col, text_col, shingle_size).persist()
-    try:
-        sigs = _signatures_from_shingles(sh, n_hashes)
-        pairs = lsh_candidate_pairs(sigs, n_bands)
-        sa = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-        sb = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        union = F.size("sh_a") + F.size("sh_b") - inter
-        losers = (
-            pairs.join(sa, "id_a")
-            .join(sb, "id_b")
-            .where((inter.cast("double") / union) >= threshold)
-            .select(F.col("id_b").alias(id_col))
-            .distinct()
-            .localCheckpoint()
-        )
-    finally:
-        sh.unpersist()
-    return df.join(losers, on=id_col, how="left_anti")
+    >= threshold (greedy-by-id survivor policy): the survivor step over
+    :func:`jaccard_similar_pairs`, whose lossless AllPairs prefix-filter
+    index guarantees recall 1.0 — fully SQL-equivalent semantics
+    (DuckDB-oracled in the contract suite)."""
+    pairs = jaccard_similar_pairs(
+        df, id_col, text_col, threshold, shingle_size
+    )
+    return _drop_pair_losers(df, pairs, id_col)
 
 
 # ---------------------------------------------------------------------------

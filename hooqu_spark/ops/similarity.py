@@ -57,6 +57,7 @@ def _cosine_udf(query_vec: Sequence[float]):
         denom = norms * qn
         with np.errstate(divide="ignore", invalid="ignore"):
             out = np.where(denom > 0, dots / denom, 0.0)
+        out[np.isnan(norms)] = np.nan  # NULL/ragged rows never rank
         return pd.Series(out)
 
     return cos
@@ -309,8 +310,15 @@ def ivf_topk(
     Scale path: materialize the assignment once and partition the
     table by it — the probe becomes a partition-pruned scan of
     ``n_probe/n_centroids`` of the data.  Recall rises with
-    ``n_probe`` (== n_centroids is exhaustive/exact)."""
-    centroids = _train_centroids(df, vec_col, id_col, n_centroids, seed=seed)
+    ``n_probe`` (== n_centroids is exhaustive/exact).  A table with no
+    non-NULL vector has nothing to train on or rank: the result is
+    empty."""
+    try:
+        centroids = _train_centroids(
+            df, vec_col, id_col, n_centroids, seed=seed
+        )
+    except _NoVectors:
+        return brute_force_topk(df, query_vec, k, vec_col, id_col)
     q = np.asarray(query_vec, dtype=np.float64)
     qn = q / max(np.linalg.norm(q), 1e-12)
     probe_lists = np.argsort(-(centroids @ qn))[:n_probe].tolist()

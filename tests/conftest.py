@@ -8,6 +8,8 @@ schemas so expected metric values carry over unchanged.
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
@@ -30,6 +32,26 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` -> ``(fn(), number of Spark jobs fn started)``,
+    counted with a job group."""
+
+    def count(fn):
+        sc = spark.sparkContext
+        # a fresh group per call: the tracker keeps earlier calls' jobs
+        group = f"test-job-budget-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
 
 
 def _schema(*fields):

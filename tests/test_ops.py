@@ -1,7 +1,7 @@
 """Tests for the training-data pipeline operators (dedup, similarity,
 text analysis, multimodal plumbing)."""
 
-import uuid
+import itertools
 
 import numpy as np
 import pytest
@@ -43,6 +43,14 @@ def docs(spark):
         (6, ""),  # empty
     ]
     return spark.createDataFrame(rows, "id long, text string")
+
+
+def shingles(t, k=3):
+    """Distinct word ``k``-gram shingles, the dedup module's definition."""
+    w = (t or "").split()
+    if len(w) < k:
+        return {" ".join(w)}
+    return {" ".join(w[i : i + k]) for i in range(len(w) - k + 1)}
 
 
 class TestExactDedup:
@@ -173,15 +181,20 @@ class TestMinHash:
         assert {3, 4}.issubset(ids)  # unrelated docs survive
 
     def test_ngram_jaccard_dedup_exact_verify(self, docs):
-        for exact in (True, False):
-            out = ngram_jaccard_dedup(docs, "id", threshold=0.8, exact=exact)
-            ids = {r["id"] for r in out.collect()}
-            assert 1 not in ids and 0 in ids, exact
-            assert {3, 4}.issubset(ids), exact
+        # survivors == brute-force greedy-by-id over exact shingle
+        # Jaccard: a row drops iff ANY smaller id matches at >= t
+        rows = {r["id"]: r["text"] for r in docs.collect()}
+        for t in (0.5, 0.8):
+            losers = set()
+            for a, b in itertools.combinations(sorted(rows), 2):
+                sa, sb = shingles(rows[a]), shingles(rows[b])
+                if len(sa & sb) / len(sa | sb) >= t:
+                    losers.add(b)
+            assert 1 in losers, t
+            out = ngram_jaccard_dedup(docs, "id", threshold=t)
+            assert {r["id"] for r in out.collect()} == set(rows) - losers, t
 
     def test_jaccard_similar_pairs_matches_brute_force(self, docs):
-        import itertools
-
         from hooqu_spark.ops import jaccard_similar_pairs
 
         got = {
@@ -190,12 +203,6 @@ class TestMinHash:
                 docs, "id", threshold=0.5
             ).collect()
         }
-
-        def shingles(t, k=3):
-            w = (t or "").split()
-            if len(w) < k:
-                return {" ".join(w)}
-            return {" ".join(w[i : i + k]) for i in range(len(w) - k + 1)}
 
         rows = {r["id"]: r["text"] for r in docs.collect()}
         want = {}
@@ -207,6 +214,24 @@ class TestMinHash:
         assert set(got) == set(want)
         for k, v in want.items():
             assert got[k] == pytest.approx(v, abs=1e-12)
+
+
+class TestDedupJobBudget:
+    def test_jobs_before_an_action(self, docs, count_jobs):
+        # each pair producer materializes its pair table once, before
+        # it releases its persisted signatures or shingles; the
+        # survivor step after it starts no job
+        from hooqu_spark.ops import minhash_dedup_clusters
+
+        budget = {
+            minhash_dedup: 1,
+            simhash_dedup: 1,
+            ngram_jaccard_dedup: 1,
+            minhash_dedup_clusters: 7,
+        }
+        for fn, want in budget.items():
+            _, jobs = count_jobs(lambda: fn(docs, "id"))
+            assert jobs == want, fn.__name__
 
 
 class TestSimHash:
@@ -1182,20 +1207,17 @@ class TestSemanticDedup:
         for p in pairs:
             assert p.cosine >= 0.99
 
-    def test_pairs_start_one_job_the_training_sample(self, spark, semvecs):
+    def test_pairs_start_one_job_the_training_sample(
+        self, semvecs, count_jobs
+    ):
         # emptiness is read off the trainer's own sample: no separate
         # probe job before the (lazy) pair frame comes back
         from hooqu_spark.ops import semantic_duplicate_pairs
 
-        sc = spark.sparkContext
-        group = f"semdedup-jobs-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            semantic_duplicate_pairs(semvecs, n_clusters=4)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        _, jobs = count_jobs(
+            lambda: semantic_duplicate_pairs(semvecs, n_clusters=4)
+        )
+        assert jobs == 1
 
 
 class TestNullEmbeddingRobustness:
@@ -1220,6 +1242,8 @@ class TestNullEmbeddingRobustness:
         got = [r.vec_id for r in brute_force_topk(nvecs, q, k=3).collect()]
         assert 99 not in got
         assert set(got[:2]) == {4, 90}  # the vector and its copy win
+        every = [r.vec_id for r in brute_force_topk(nvecs, q, k=40).collect()]
+        assert 99 not in every and len(every) == 31
 
     def test_semantic_dedup_null_survives_both_modes(self, nvecs):
         from hooqu_spark.ops import semantic_dedup
@@ -1250,6 +1274,18 @@ class TestNullEmbeddingRobustness:
             for r in ivf_probe_index(spark, path, q, k=2, n_probe=4).collect()
         ]
         assert set(got) == {4, 90}
+
+    def test_ivf_topk_all_null_is_empty(self, spark):
+        # nothing to train centroids on and nothing to rank: an empty
+        # top-k with the usual schema, not a crash
+        from hooqu_spark.ops import ivf_topk
+
+        allnull = spark.createDataFrame(
+            [(0, None), (1, None)], "vec_id long, embedding array<double>"
+        )
+        out = ivf_topk(allnull, [1.0, 2.0], k=3, n_centroids=2)
+        assert out.columns == ["vec_id", "cosine"]
+        assert out.collect() == []
 
     def test_near_duplicates_skip_null(self, nvecs):
         pairs = embedding_near_duplicates(

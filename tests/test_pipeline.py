@@ -4,7 +4,6 @@ gating suite, and checkpoint/resume."""
 
 import os
 import shutil
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -172,20 +171,6 @@ def assert_gate_equals_scan(result):
         ]
 
 
-def count_jobs(spark, fn):
-    """(fn(), number of Spark jobs it started)."""
-    sc = spark.sparkContext
-    # a fresh group per call: the tracker keeps earlier calls' jobs
-    group = f"test-job-budget-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 class TestPipelineEndToEnd:
     def test_run_pipeline_and_resume(self, spark, pages, tmp_path):
         work = str(tmp_path / "work")
@@ -319,10 +304,10 @@ class TestPipelineEndToEnd:
         assert result.processed_buckets == []
         assert result.kept.count() == 0
 
-    def test_fresh_run_job_budget(self, spark, pages, tmp_path):
+    def test_fresh_run_job_budget(self, spark, pages, tmp_path, count_jobs):
         pages.count()  # the cached fixture is not part of the run
         result, jobs = count_jobs(
-            spark, lambda: run_pipeline(spark, pages, str(tmp_path / "work"), n_buckets=8)
+            lambda: run_pipeline(spark, pages, str(tmp_path / "work"), n_buckets=8)
         )
         assert len(result.processed_buckets) == 8
         # checkpoint write, states job, per-bucket url frequencies
@@ -415,26 +400,29 @@ class TestCheckpointCommitProtocol:
         assert result.processed_buckets == [] and len(result.resumed_buckets) == 8
         assert_each_doc_once(result)
 
-    def test_bucket_count_adds_no_listing_job(self, spark, pages, tmp_path):
+    def test_bucket_count_adds_no_listing_job(
+        self, spark, pages, tmp_path, count_jobs
+    ):
         pages.count()  # the cached fixture is not part of the run
         jobs = {}
         for n in (8, 64):
             result, jobs[n] = count_jobs(
-                spark,
                 lambda: run_pipeline(spark, pages, str(tmp_path / f"w{n}"), n_buckets=n),
             )
             assert len(result.processed_buckets) == n
         assert jobs[64] <= jobs[8]
 
     @pytest.mark.parametrize("scheme", ["", "file://"], ids=["plain", "file_uri"])
-    def test_resume_of_a_finished_run_starts_no_job(self, spark, pages, tmp_path, scheme):
+    def test_resume_of_a_finished_run_starts_no_job(
+        self, spark, pages, tmp_path, scheme, count_jobs
+    ):
         work = str(tmp_path / "work")
         first = run_pipeline(spark, pages, scheme + work, run_id="r", n_buckets=8)
         dirs = attempt_dirs(work, "r")
         assert len(dirs) == 1
 
         result, jobs = count_jobs(
-            spark, lambda: run_pipeline(spark, pages, scheme + work, run_id="r", n_buckets=8)
+            lambda: run_pipeline(spark, pages, scheme + work, run_id="r", n_buckets=8)
         )
         assert jobs == 0
         assert result.processed_buckets == [] and len(result.resumed_buckets) == 8
