@@ -325,8 +325,6 @@ class Analyzer(ABC):
         Failure metrics (reference lifecycle ``analyzer.py:80-121``)."""
         error = find_first_failing(data.schema, self.preconditions())
         if error is not None:
-            if isinstance(error, (ValueError, KeyError)):
-                return self.to_failure_metric(error)
             return self.to_failure_metric(error)
         try:
             state = self.compute_state_from(data)

@@ -475,10 +475,33 @@ def simhash_dedup(
 # Connected components (transitive duplicate clusters)
 # ---------------------------------------------------------------------------
 
-def _cc_min_neighbor(sym: DataFrame) -> DataFrame:
-    """m(u) = min(N(u) ∪ {u}) over a symmetric edge table (u, v)."""
-    return sym.groupBy("u").agg(
-        F.least(F.min("v"), F.first("u")).alias("m")
+def _both_ways(edges: DataFrame) -> DataFrame:
+    """``(u, v)`` and ``(v, u)`` for every edge ``(u, v)``, in one read."""
+    back = F.struct(F.col("v").alias("u"), F.col("u").alias("v"))
+    return edges.select(F.inline(F.array(F.struct("u", "v"), back)))
+
+
+def _star(edges: DataFrame, large: bool) -> DataFrame:
+    """One half-round over edges ``(u, v)``: group each node's neighbour
+    set ``N(u)``, then emit ``(t, min(N(u) ∪ {u}))`` for ``t`` in
+    ``N(u)`` above ``u`` (large-star), or at or below ``u`` plus ``u``
+    itself (small-star).  Self-loops and repeated edges are harmless:
+    ``collect_set`` drops them, so no output needs a ``distinct``."""
+    nbrs = _both_ways(edges).groupBy("u").agg(F.collect_set("v").alias("n"))
+    u = F.col("u")
+    if large:
+        targets = F.filter("n", lambda t: t > u)
+    else:
+        targets = F.concat(F.filter("n", lambda t: t <= u), F.array(u))
+    return nbrs.select(
+        F.explode(targets).alias("u"), F.least(F.array_min("n"), u).alias("v")
+    ).where(F.col("u") != F.col("v"))
+
+
+def _labels(edges: DataFrame) -> DataFrame:
+    """``(u, cluster, hi)``: ``min(N(u) ∪ {u})`` and ``max(N(u))``."""
+    return _both_ways(edges).groupBy("u").agg(
+        F.least(F.min("v"), "u").alias("cluster"), F.max("v").alias("hi")
     )
 
 
@@ -496,72 +519,28 @@ def duplicate_clusters(
     chains (quote-of-a-quote-of-a-quote pages) collapse in a handful of
     rounds.
 
-    Each round is two join+groupBy passes over the EDGE table:
+    A round is large-star then small-star (:func:`_star`), one
+    ``groupBy`` each, after which every edge points at a smaller id: a
+    node is a source iff its least neighbour is below it, and its label
+    ``min(N(u) ∪ {u})`` is its smallest target (or itself).  One job
+    per round then checks for a star forest — no source has two targets
+    or is a target, so no source has two distinct neighbours.  That is
+    the fixed point: a star's center is its component minimum, and both
+    half-rounds re-emit exactly its ``(leaf, center)`` edges, so the
+    loop stops on reaching it rather than one round later.  A run cut
+    short by ``max_iterations`` returns the labels reached so far.  A
+    node's neighbour set is bounded by its component (a converged
+    center's is the whole component).
 
-    * large-star: every node attaches its strictly-larger neighbors to
-      the minimum of its neighborhood (+ itself);
-    * small-star: every node attaches its smaller-or-equal neighbors
-      (and itself) to that minimum.
-
-    Edges only ever point "downhill" toward component minima; at
-    convergence the edge set is a star per component.  Returns
-    ``(id, cluster)`` where ``cluster`` is the component's smallest id;
+    Returns ``(id, cluster)``, ``cluster`` the component's smallest id;
     isolated nodes never appear in ``pairs`` and are absent.
     """
-    edges = (
-        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
+    edges = pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
     for _ in range(max_iterations):
-        sym = edges.unionByName(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).distinct()
-        # large-star: (v, m(u)) for v > u
-        m = _cc_min_neighbor(sym)
-        large = (
-            sym.where(F.col("v") > F.col("u"))
-            .join(m, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star over the large-star output: (v, m(u)) for v <= u,
-        # plus (u, m(u)) — keeps every node attached to its current min
-        sym2 = large.unionByName(
-            large.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).distinct()
-        m2 = _cc_min_neighbor(sym2)
-        attach = (
-            sym2.where(F.col("v") <= F.col("u"))
-            .join(m2, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        self_edge = m2.select(F.col("u"), F.col("m").alias("v"))
-        new_edges = (
-            attach.unionByName(self_edge)
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint()  # truncate lineage per round
-        )
-        converged = (
-            new_edges.exceptAll(edges).isEmpty()
-            and edges.exceptAll(new_edges).isEmpty()
-        )
-        edges = new_edges
-        if converged:
+        edges = _star(_star(edges, True), False).localCheckpoint()
+        if _labels(edges).where("cluster < u AND cluster < hi").isEmpty():
             break
-    # star state: every non-minimum node points at its component min;
-    # the min itself appears only as a target (groupBy-min guards the
-    # not-fully-converged max_iterations edge case)
-    members = edges.groupBy("u").agg(F.min("v").alias("cluster"))
-    centers = edges.select(F.col("v").alias("u")).distinct().join(
-        edges.select("u").distinct(), "u", "left_anti"
-    ).select("u", F.col("u").alias("cluster"))
-    return members.unionByName(centers).distinct().withColumnRenamed(
-        "u", "id"
-    )
+    return _labels(edges).select(F.col("u").alias("id"), "cluster")
 
 
 def dedup_by_clusters(

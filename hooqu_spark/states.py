@@ -34,13 +34,6 @@ class State(ABC):
     def to_dict(self) -> Dict[str, Any]:
         return dict(asdict(self), _type=type(self).__name__)
 
-    @classmethod
-    def from_dict(cls, d: Dict[str, Any]) -> "State":
-        kind = d.pop("_type", cls.__name__)
-        target = _STATE_TYPES.get(kind, cls)
-        names = {f.name for f in fields(target)}
-        return target(**{k: v for k, v in d.items() if k in names})
-
 
 class DoubleValuedState(State):
     @abstractmethod

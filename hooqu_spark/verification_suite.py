@@ -71,7 +71,6 @@ class VerificationRunBuilder:
 class VerificationSuite:
     def __init__(self):
         self._checks: List[Check] = []
-        self._required_analyzers: Optional[Tuple[Analyzer, ...]] = None
 
     def add_check(self, check: Check) -> "VerificationSuite":
         self._checks.append(check)
@@ -85,9 +84,7 @@ class VerificationSuite:
         return VerificationRunBuilder(data)
 
     def run(self, data: DataFrame) -> VerificationResult:
-        return self.do_verification_run(
-            data, self._checks, self._required_analyzers
-        )
+        return self.do_verification_run(data, self._checks)
 
     def do_verification_run(
         self,

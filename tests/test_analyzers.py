@@ -10,6 +10,7 @@ import math
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 import hooqu_spark.patterns as hpatterns
 from hooqu_spark.analyzers import (
@@ -284,6 +285,61 @@ class TestQuantileAnalyzer:
             got = ctx.metric(Quantile("att1", q, where="g = 1")).value.get()
             assert got == gated.quantile(q, interpolation="nearest"), q
 
+
+
+class TestApproxQuantiles:
+    """The sketch quantiles against numpy's exact (linear) quantile on a
+    column with NULLs and NaNs, which both leave out.  Tolerances are in
+    ranks: the distance from numpy's fractional index ``q * (n - 1)`` to
+    the rank the returned value interpolates to in the sorted data."""
+
+    @pytest.fixture
+    def column(self, spark):
+        rng = np.random.RandomState(11)
+        vals = (rng.standard_normal(900) * 100).tolist()
+        rows = [(i, v) for i, v in enumerate(vals)]
+        rows += [(900 + i, None) for i in range(30)]
+        rows += [(930 + i, float("nan")) for i in range(30)]
+        df = spark.createDataFrame(rows, "id long, att1 double")
+        return df, np.sort(np.array(vals))
+
+    @staticmethod
+    def rank_error(sorted_vals, got, q):
+        rank = np.interp(got, sorted_vals, np.arange(len(sorted_vals)))
+        return abs(rank - q * (len(sorted_vals) - 1))
+
+    def test_sketches_match_numpy_quantile(self, column):
+        from hooqu_spark.analyzers import (
+            ApproxQuantile,
+            QuantileSketch,
+            do_analysis_run,
+        )
+        from hooqu_spark.lineage import (
+            compute_partition_states,
+            merge_states,
+            metrics_from_states,
+        )
+
+        df, vals = column
+        exact = np.quantile(vals, 0.5)
+        approx, sketch = ApproxQuantile("att1", 0.5), QuantileSketch("att1", 0.5)
+        ctx = do_analysis_run(df, [approx, sketch])
+        # percentile_approx returns a data value; at accuracy 10000 its
+        # rank is within n / 10000 of the target: one rank at most
+        got = ctx.metric(approx).value.get()
+        assert self.rank_error(vals, got, 0.5) <= 1
+        # q = 0.5 is grid point 50 of 101: Spark's exact percentile, no
+        # rank error
+        assert ctx.metric(sketch).value.get() == pytest.approx(exact)
+
+        # three per-partition states merged: each merge re-grids the
+        # pooled anchors, so the error is a grid step (n / 100 ranks)
+        records = compute_partition_states(
+            df.withColumn("b", (F.col("id") % 3).cast("string")), [sketch], "b"
+        )
+        assert len(records) == 3
+        merged = metrics_from_states([sketch], merge_states(records))[sketch]
+        assert self.rank_error(vals, merged.value.get(), 0.5) <= len(vals) / 100
 
 class TestComplianceAnalyzer:
     def test_compute_correct_metrics(self, df_with_numeric_values):

@@ -227,7 +227,8 @@ class TestDedupJobBudget:
             minhash_dedup: 1,
             simhash_dedup: 1,
             ngram_jaccard_dedup: 1,
-            minhash_dedup_clusters: 7,
+            # pair table + one round (one checkpoint, one star check)
+            minhash_dedup_clusters: 3,
         }
         for fn, want in budget.items():
             _, jobs = count_jobs(lambda: fn(docs, "id"))
@@ -795,6 +796,20 @@ class TestStarConnectedComponents:
         }
         assert len(labels) == 200
         assert set(labels.values()) == {0}
+
+    def test_star_forest_stops_after_one_round(self, spark, count_jobs):
+        # disjoint pairs are a star forest after the first round: one
+        # checkpoint job, one star-check job, then the collect
+        from hooqu_spark.ops import duplicate_clusters
+
+        pairs = spark.createDataFrame(
+            [(2 * i, 2 * i + 1) for i in range(1000)], "id_a long, id_b long"
+        )
+        rows, jobs = count_jobs(lambda: duplicate_clusters(pairs).collect())
+        assert {(r["id"], r["cluster"]) for r in rows} == {
+            (i, i - i % 2) for i in range(2000)
+        }
+        assert jobs == 3
 
 
 class TestIvfIndex:
